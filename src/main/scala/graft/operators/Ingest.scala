@@ -108,10 +108,13 @@ object Ingest {
       .select("data.*")
 
   /** P6-P9: epoch-millis string → DateType, the reference's exact expression
-    * shape (cassandra_sink.scala:119). UTC session TZ pinned in build.sbt. */
+    * shape (cassandra_sink.scala:119). UTC session TZ pinned in build.sbt.
+    * The string → number step is a try-cast: a non-numeric `timestamp_ms`
+    * derives a null date, as on the reference's non-ANSI Spark 2.3, instead
+    * of failing the micro-batch (and every replay of it) under ANSI. */
   def deriveDate(df: DataFrame): DataFrame =
-    df.withColumn("timestamp_dt",
-      to_date(from_unixtime(col("timestamp_ms") / 1000.0, "yyyy-MM-dd HH:mm:ss.SSS")))
+    df.withColumn("timestamp_dt", to_date(from_unixtime(
+      col("timestamp_ms").try_cast("double") / 1000.0, "yyyy-MM-dd HH:mm:ss.SSS")))
 
   /** P10: the null-rejecting key filter (cassandra_sink.scala:120) — drops
     * empty AND null markers (SQL three-valued logic), including the null
@@ -120,10 +123,11 @@ object Ingest {
     df.filter(col("fx_marker") =!= "")
 
   /** Batch twin of the Cassandra PK upsert (cassandra_sink.scala:71-77):
-    * last-writer-wins per key, "last" = max event timestamp. One shuffle on
-    * the key; survives any scale because state per key is O(1). */
+    * last-writer-wins per key, "last" = max event timestamp; a null or
+    * non-numeric timestamp (try-cast) sorts last. One shuffle on the key;
+    * survives any scale because state per key is O(1). */
   def latestPerKey(df: DataFrame, key: String = "fx_marker",
-                   ts: Column = col("timestamp_ms").cast("long")): DataFrame =
+                   ts: Column = col("timestamp_ms").try_cast("long")): DataFrame =
     df.withColumn("__rn", row_number().over(
         Window.partitionBy(col(key)).orderBy(ts.desc)))
       .filter(col("__rn") === 1)

@@ -81,40 +81,76 @@ class KeyedUpsertForeachWriter(storeName: String, keyOrdinal: Int = 0)
   * wires; the driver-side map store above survives only as the
   * reference-fidelity [[KeyedUpsertForeachWriter]] adapter.
   *
-  * Merge = read current state ∪ new batch → window-dedup per key → write new
-  * generation directory → flip the `_CURRENT` pointer (atomic rename).
-  * Every step is a distributed DataFrame op — no `collect()` anywhere in
-  * the merge plan; driver code only moves the pointer. `orderCol` decides
-  * the winner within the unioned state (event-time LWW). Generations make
-  * readers immune to concurrent compaction. At 100 TB the same shape is a
-  * MERGE INTO on a transactional table format (partition-parallel write);
-  * the LWW contract and the batch-side reduction are identical.
+  * Merge = dedup the batch on its own (one shuffle on the key, then a
+  * per-key latest) → full-outer shuffled-hash join of the current state
+  * against it on the key (the state's only shuffle; no sort of the state)
+  * → write the new generation directory → flip the `_CURRENT` pointer
+  * (atomic rename). The state is read with the schema of the generation
+  * this instance last wrote; a generation it did not write (a new instance
+  * on an existing directory) is inferred once. Every step is a distributed
+  * DataFrame op — no `collect()` anywhere in the merge plan; driver code
+  * only moves the pointer.
+  *
+  * LWW rule per key, `orderCol` try-cast to long: the later event time
+  * wins and the batch row wins ties; a null or non-numeric order value
+  * loses to a numeric one (two of them tie, so the batch row wins). Rows
+  * with a null key are never stored (the rule of `Ingest.filterKeyed`).
+  * Merging a batch again under its `batchId` — the replay after a crash
+  * that landed after the flip — rewrites the same state: its rows tie with
+  * themselves and win. Generations make readers immune to concurrent
+  * compaction. At 100 TB the same shape is a MERGE INTO on a transactional
+  * table format (partition-parallel write); the LWW contract and the
+  * batch-side reduction are identical.
   */
 class ParquetKeyedStore(rootDir: String, keyCol: String, orderCol: String) {
   import java.nio.file.{Files, Paths, StandardCopyOption}
+  import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.functions._
+  import org.apache.spark.sql.types.StructType
   private val root = Paths.get(rootDir)
   private val pointer = root.resolve("_CURRENT")
   Files.createDirectories(root)
+  /** The generation this instance last wrote, with its schema. */
+  @volatile private var written: Option[(String, StructType)] = None
 
   private def currentGen: Option[String] =
     if (Files.exists(pointer)) Some(Files.readString(pointer).trim) else None
 
   /** Current state as a DataFrame (empty schema-less read guarded). */
-  def read(spark: org.apache.spark.sql.SparkSession): Option[DataFrame] =
-    currentGen.map(g => spark.read.parquet(root.resolve(g).toString))
+  def read(spark: SparkSession): Option[DataFrame] =
+    currentGen.map { g =>
+      val path = root.resolve(g).toString
+      written.collect { case (`g`, schema) => spark.read.schema(schema).parquet(path) }
+        .getOrElse(spark.read.parquet(path))
+    }
+
+  /** The state after applying `batch`: what [[merge]] writes. */
+  def applied(batch: DataFrame): DataFrame = {
+    val spark = batch.sparkSession
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // a by-number repartition: AQE cannot coalesce it away, so the join
+    // below reuses it and shuffles only the state
+    val latest = graft.operators.Ingest.latestPerKey(
+      batch.filter(col(keyCol).isNotNull).repartition(partitions, col(keyCol)),
+      keyCol, col(orderCol).try_cast("long"))
+    read(spark).fold(latest) { cur =>
+      val state = cur.filter(col(keyCol).isNotNull)
+      val ts = state(orderCol).try_cast("long")
+      val keepState = latest(keyCol).isNull ||
+        coalesce(ts > latest(orderCol).try_cast("long"), ts.isNotNull)
+      state.join(latest.hint("shuffle_hash"), state(keyCol) === latest(keyCol), "full_outer")
+        .select(batch.columns.toSeq.map(c => when(keepState, state(c)).otherwise(latest(c)).as(c)): _*)
+    }
+  }
 
   /** foreachBatch body: distributed LWW merge of `batch` into the store. */
   def merge(batch: DataFrame, batchId: Long): Unit = {
-    import org.apache.spark.sql.functions._
-    val spark = batch.sparkSession
-    val unioned = read(spark) match {
-      case Some(cur) => cur.unionByName(batch)
-      case None => batch
-    }
-    val compacted = graft.operators.Ingest
-      .latestPerKey(unioned, keyCol, col(orderCol).cast("long"))
     val gen = f"gen-$batchId%020d"
-    compacted.write.mode("overwrite").parquet(root.resolve(gen).toString)
+    // a batch merged again under its id overwrites the generation it reads:
+    // materialize the new state before the overwrite deletes the old one
+    val next = if (currentGen.contains(gen)) applied(batch).localCheckpoint() else applied(batch)
+    next.write.mode("overwrite").parquet(root.resolve(gen).toString)
+    written = Some(gen -> next.schema)
     val tmp = root.resolve(s"_CURRENT.$batchId.tmp")
     Files.writeString(tmp, gen)
     Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
