@@ -379,7 +379,8 @@ object Bench {
       // moved build cost as sim_topk_pq/text_index_drift regressions.
       // Query-result memos stay uncharged: each query's serve is timed.
       ("fixture:sim_indexes",
-        q => q.startsWith("sim_top") || q.startsWith("sim_ann") ||
+        q => Set("sim_topk_pq", "sim_topk_ivf", "sim_topk_ivfpq")(q) ||
+          q.startsWith("sim_ann") ||
           q.startsWith("sim_hybrid") || q.startsWith("sim_index") ||
           q == "sim_hard_negatives_ivf" || q == "sim_cell_drift",
         () => graft.operators.Similarity.warmIndexes(spark, sfDir)),

@@ -3582,12 +3582,22 @@ object CorpusLake {
       () => { optLakeDir(spark, dir); () },
       () => { branchLake(spark, dir); () },
       () => { replicaLakeDir(spark, dir); () })
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(builds.size)
+    runAll(builds.size, builds)
+  }
+
+  /** Runs `tasks` on a pool of `threads` (at least one) and returns once
+    * EVERY task has finished; the first failure, in task order, is
+    * rethrown only then, so no task is still writing when the call
+    * fails. */
+  private[graft] def runAll(threads: Int, tasks: Seq[() => Unit]): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, threads))
     try {
       val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      builds.map(b => scala.concurrent.Future(b())(ec))
-        .foreach(f => scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf))
+      tasks.map(t => scala.concurrent.Future(t())(ec))
+        .map(f => scala.util.Try(scala.concurrent.Await.result(f,
+          scala.concurrent.duration.Duration.Inf)))
+        .collectFirst { case scala.util.Failure(e) => throw e }
     } finally pool.shutdown()
   }
 

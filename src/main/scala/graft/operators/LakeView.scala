@@ -918,31 +918,25 @@ object LakeView {
         // sequential loop, only the wall overlaps. Pool of ≤4: enough to
         // fill the tail, not enough to thrash the scheduler (guide's own
         // sizing guidance). A failed view's exception still fails the
-        // call; other views may have completed — the same partial-progress
-        // surface a sequential loop's earlier views already had.
+        // call, but only once every other view's refresh has finished:
+        // other views may have completed — the same partial-progress
+        // surface a sequential loop's earlier views already had — and
+        // none is still writing its dir when the call returns.
         val behind = states.filter(_._3 < h)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(4, math.max(1, behind.size)))
-        try {
-          val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val futs = behind.map { case (vd, spec, from) =>
-            scala.concurrent.Future {
-              val tv = System.nanoTime()
-              refreshOne(spark, dir, corpusDir, vd, spec,
-                from, h, shared, sharedHistory = true,
-                unchangedInputs = sharedUnchanged.get(vd))
-              maybeAutoCompact(spark, vd, h, compactEvery)
-              // env-gated cost split (SPARK_GRAFT_VIEW_TIMING=1): which
-              // leg of a refresh carries the cost at scale — the shared
-              // history build or a per-view fan-out
-              if (sys.env.contains("SPARK_GRAFT_VIEW_TIMING"))
-                System.err.println(s"[viewtiming] view=$vd perView=" +
-                  s"${(System.nanoTime() - tv) / 1000000}ms")
-            }(ec)
-          }
-          futs.foreach(f => scala.concurrent.Await.result(f,
-            scala.concurrent.duration.Duration.Inf))
-        } finally pool.shutdown()
+        CorpusLake.runAll(math.min(4, behind.size),
+          behind.map { case (vd, spec, from) => () => {
+            val tv = System.nanoTime()
+            refreshOne(spark, dir, corpusDir, vd, spec,
+              from, h, shared, sharedHistory = true,
+              unchangedInputs = sharedUnchanged.get(vd))
+            maybeAutoCompact(spark, vd, h, compactEvery)
+            // env-gated cost split (SPARK_GRAFT_VIEW_TIMING=1): which
+            // leg of a refresh carries the cost at scale — the shared
+            // history build or a per-view fan-out
+            if (sys.env.contains("SPARK_GRAFT_VIEW_TIMING"))
+              System.err.println(s"[viewtiming] view=$vd perView=" +
+                s"${(System.nanoTime() - tv) / 1000000}ms")
+          } })
         if (sys.env.contains("SPARK_GRAFT_VIEW_TIMING"))
           System.err.println(s"[viewtiming] window=($fromMin,$h] shared=" +
             s"${(tShared - t0) / 1000000}ms")

@@ -12,6 +12,11 @@ import graft.operators.Ingest
   * Kafka wire payload (newline-delimited JSON docs) — `MemoryStream` in
   * tests, a file/rate source locally, the Kafka source verbatim on a real
   * cluster (same envelope schema, see Ingest.envelopeColumns).
+  *
+  * Both starts install [[LocalCheckpointFileManager]] as the session's
+  * checkpoint manager (unless it names one): on a `file:` checkpoint it
+  * writes each batch's source-log, offset and commit files without
+  * spawning a process; other schemes keep Spark's default manager.
   */
 object StreamPipeline {
 
@@ -22,13 +27,15 @@ object StreamPipeline {
   /** Row-wise fidelity variant: ForeachWriter, `update` output mode, as in
     * the reference (`.queryName(...).outputMode("update").foreach(...)`). */
   def startForeach(envelope: DataFrame, storeName: String,
-                   checkpoint: String): StreamingQuery =
+                   checkpoint: String): StreamingQuery = {
+    LocalCheckpointFileManager.install(envelope.sparkSession)
     transform(envelope).writeStream
       .queryName("KafkaToKeyedStoreForeach")
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreach(new KeyedUpsertForeachWriter(storeName))
       .start()
+  }
 
   /** Set-oriented CANONICAL variant (SURVEY.md §7.5.5): foreachBatch
     * merging into the fully distributed compacted parquet keyed table —
@@ -37,6 +44,7 @@ object StreamPipeline {
   def startBatchMerge(envelope: DataFrame, storeDir: String,
                       checkpoint: String): StreamingQuery = {
     val store = new ParquetKeyedStore(storeDir, "fx_marker", "timestamp_ms")
+    LocalCheckpointFileManager.install(envelope.sparkSession)
     transform(envelope).writeStream
       .queryName("KafkaToKeyedStoreBatch")
       .outputMode("update")

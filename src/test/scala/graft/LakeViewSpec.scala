@@ -983,4 +983,40 @@ class LakeViewSpec extends SparkSpec {
       == recomputeMM(corpus).map(r => r.take(6)),
       "shared minmax view diverged from the head recompute")
   }
+
+  test("lake view: a failed view fails refreshViews only after every " +
+      "other view's refresh has finished") {
+    import scala.jdk.CollectionConverters._
+    val corpus = mkLake()
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-view-poison")
+    // builds its base (no base doc ends in " re") but fails on the
+    // lake's v2 re-admissions, inside its own refresh task
+    val poison = s"$root/poison"
+    LakeView.createView(spark, dir, poison, dims, Seq("boom" ->
+      ("CAST(CASE WHEN text LIKE '% re' THEN raise_error('poisoned view') " +
+        "ELSE 0 END AS BIGINT)")))
+    val sums = s"$root/sums"; val mm = s"$root/mm"
+    LakeView.createView(spark, dir, sums, dims, measures)
+    LakeView.createView(spark, dir, mm, dims, measures,
+      minMeasures, maxMeasures)
+    intercept[Exception] {
+      LakeView.refreshViews(spark, dir, corpus, Seq(poison, sums, mm))
+    }
+    def tree(): Map[String, Long] = {
+      val s = java.nio.file.Files.walk(root)
+      try s.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString -> java.nio.file.Files.size(p))
+        .toMap
+      finally s.close()
+    }
+    val atReturn = tree()
+    for (v <- Seq(sums, mm))
+      assert(spark.read.parquet(s"$v/cursor").agg(max(col("last_version")))
+        .head().getLong(0) == 2L, s"$v had not finished when the call failed")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$poison/cursor")),
+      "the poisoned view must not advance its cursor")
+    Thread.sleep(1500)
+    assert(tree() == atReturn, "a refresh task kept writing after the call failed")
+  }
 }
