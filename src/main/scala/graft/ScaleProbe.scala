@@ -36,6 +36,33 @@ object ScaleProbe {
     }.sum
   }
 
+  /** Healthy-host reference for [[calibrationProbe]]: median seconds on an
+    * idle host (r13). Re-baseline it when the host generation changes. */
+  private val CalReference = 0.44
+
+  /** Fixed synthetic throughput probe: median of 3 runs of one canonical
+    * hash-agg plan over a bounded scan of `calDir`'s lineitem. Independent
+    * of the probe set, so it cannot drift as probes are added. A missing
+    * or broken table fails the run: a silent fallback would read as
+    * `cal 1.00` and hide the contention it exists to flag. */
+  private def calibrationProbe(spark: SparkSession, calDir: String): Double =
+    try {
+      import org.apache.spark.sql.functions._
+      val li = spark.read.parquet(s"$calDir/lineitem.parquet").limit(1000000)
+      val times = (1 to 3).map { _ =>
+        val t0 = System.nanoTime()
+        li.groupBy(col("l_returnflag"), col("l_linestatus"))
+          .agg(sum(col("l_quantity")), avg(col("l_extendedprice")),
+            count(lit(1)))
+          .count()
+        (System.nanoTime() - t0) / 1e9
+      }
+      times.sorted.apply(1)
+    } catch { case scala.util.control.NonFatal(e) =>
+      throw new IllegalStateException(
+        s"calibration probe failed on SPARK_GRAFT_CAL_DIR=$calDir: ${e.getMessage}", e)
+    }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <sfDir> [sfDir...]")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -1036,23 +1063,22 @@ object ScaleProbe {
       // host-contention calibration PER SCALE POINT (the r17 verdict:
       // cross-scale ratio trends measured in different windows are
       // contention-confounded — SCALING.md's 40k-vs-200k freshness spread
-      // was exactly that). The same fixed 1M-row probe Bench uses, run
+      // was exactly that). A fixed 1M-row probe, run
       // before and after each dir's sweep against a STABLE table dir
       // (sparse fixtures carry no lineitem), so every probe line can be
       // read against the worst cal of its own window.
       val calDir = sys.env.getOrElse("SPARK_GRAFT_CAL_DIR",
         "/root/testdata/sf0.1")
       // discard one probe run first: the FIRST calibration in a fresh JVM
-      // measures JIT compilation, not host throughput (Bench avoids this
-      // by calibrating after its query warmups; a probe sweep has none)
-      if (!calWarmed) { Bench.calibrationProbe(spark, calDir); calWarmed = true }
-      val calStart = Bench.calibrationProbe(spark, calDir) / Bench.CalReference
+      // measures JIT compilation, not host throughput
+      if (!calWarmed) { calibrationProbe(spark, calDir); calWarmed = true }
+      val calStart = calibrationProbe(spark, calDir) / CalReference
       only.fold(runnable)(s => runnable.filter(p => s(p._1))).foreach { case (name, n, run) =>
         val (c, o) = run()
         println(s"""{"probe":"$name","sf":"$dir","corpus":$n,"candidates":$c,"output":$o}""")
         graft.sources.Caches.releaseAll()
       }
-      val calEnd = Bench.calibrationProbe(spark, calDir) / Bench.CalReference
+      val calEnd = calibrationProbe(spark, calDir) / CalReference
       System.err.println(f"""[scaleprobe] {"sf":"$dir","cal_start":$calStart%.2f,"cal_end":$calEnd%.2f,"cal_worst":${math.max(calStart, calEnd)}%.2f}""")
     }
     spark.stop()

@@ -55,54 +55,24 @@ object Verify {
     // committed CORRECTNESS_r*.json produced no result this run. All
     // outputs are already written above, so the banner costs nothing.
     // SPARK_GRAFT_STRICT_EXIT=1 turns the banner into a nonzero exit.
+    val strict = sys.env.get("SPARK_GRAFT_STRICT_EXIT").contains("1")
     if (only.isEmpty) {
-      // top-level keys of the driver's per-query result map, by brace-depth
-      // scan: a regex over the whole file would also collect any FUTURE
-      // nested-object key inside a query entry and then report it forever
-      // as "vanished" — depth 1 is the only level query names live at
-      def topLevelKeys(json: String): Set[String] = {
-        val keys = scala.collection.mutable.Set.empty[String]
-        var depth = 0; var inStr = false; var esc = false
-        var pendingKey: String = null
-        val sb = new StringBuilder
-        json.foreach { c =>
-          if (inStr) {
-            if (esc) esc = false
-            else if (c == '\\') esc = true
-            else if (c == '"') {
-              inStr = false
-              if (depth == 1 && pendingKey == null) pendingKey = sb.toString
-            } else sb.append(c)
-          } else c match {
-            case '"' => inStr = true; sb.clear()
-            case '{' | '[' => depth += 1
-            case '}' | ']' => depth -= 1; if (depth <= 1) pendingKey = null
-            case ':' =>
-              if (depth == 1 && pendingKey != null) { keys += pendingKey; pendingKey = null }
-            case ',' => if (depth == 1) pendingKey = null
-            case _ => ()
-          }
-        }
-        keys.toSet
-      }
       // resolved repo root, not bare CWD: running Verify from elsewhere
       // must say the check is off, not silently disable it
       val root = new java.io.File(
         sys.env.getOrElse("SPARK_GRAFT_REPO_ROOT", "."))
+      var unreadable = false
       val prevGreen: Set[String] =
-        try {
-          val files = Option(root.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.getName.matches("CORRECTNESS_r\\d+\\.json"))
-          if (files.isEmpty) {
-            System.err.println(s"[verify] note: no CORRECTNESS_r*.json under " +
-              s"${root.getAbsolutePath} — key-set drift check has nothing to compare " +
-              "(set SPARK_GRAFT_REPO_ROOT if running outside the repo root)")
-            Set.empty
-          } else {
-            val latest = files.maxBy(_.getName)
-            topLevelKeys(Files.readString(latest.toPath))
-          }
-        } catch { case _: Throwable => Set.empty }
+        try previouslyGreen(root).getOrElse {
+          System.err.println(s"[verify] note: no CORRECTNESS_r*.json under " +
+            s"${root.getAbsolutePath} — key-set drift check has nothing to compare " +
+            "(set SPARK_GRAFT_REPO_ROOT if running outside the repo root)")
+          Set.empty[String]
+        } catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[verify] note: ${e.getMessage} — key-set drift check is OFF")
+          unreadable = true
+          Set.empty[String]
+        }
       val vanished = (prevGreen -- SparkEntry.queries.keySet) ++
         (prevGreen & failed.keySet.toSet)
       if (failed.nonEmpty || vanished.nonEmpty) {
@@ -113,8 +83,53 @@ object Verify {
           s"[verify] key-set SHRANK vs last round's CORRECTNESS file: ${vanished.mkString(", ")}")
         System.err.println("[verify] fixture/loader drift — fix before snapshotting the round")
         System.err.println("!" * 72)
-        if (sys.env.get("SPARK_GRAFT_STRICT_EXIT").contains("1")) sys.exit(2)
+        if (strict) sys.exit(2)
+      }
+      if (unreadable && strict) sys.exit(2)
+    }
+  }
+
+  /** Query names of the NEWEST committed `CORRECTNESS_r*.json` under
+    * `root`, or None when there is none. An unreadable newest file throws
+    * an error naming it: reading it as "nothing to compare" would switch
+    * the key-set drift alarm off without a trace. */
+  private[graft] def previouslyGreen(root: java.io.File): Option[Set[String]] =
+    Option(root.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.matches("CORRECTNESS_r\\d+\\.json"))
+      .maxByOption(_.getName).map { latest =>
+        try topLevelKeys(Files.readString(latest.toPath))
+        catch { case scala.util.control.NonFatal(e) =>
+          throw new IllegalStateException(s"cannot read ${latest.getPath}: $e", e)
+        }
+      }
+
+  // top-level keys of the driver's per-query result map, by brace-depth
+  // scan: a regex over the whole file would also collect any FUTURE
+  // nested-object key inside a query entry and then report it forever
+  // as "vanished" — depth 1 is the only level query names live at
+  private def topLevelKeys(json: String): Set[String] = {
+    val keys = scala.collection.mutable.Set.empty[String]
+    var depth = 0; var inStr = false; var esc = false
+    var pendingKey: String = null
+    val sb = new StringBuilder
+    json.foreach { c =>
+      if (inStr) {
+        if (esc) esc = false
+        else if (c == '\\') esc = true
+        else if (c == '"') {
+          inStr = false
+          if (depth == 1 && pendingKey == null) pendingKey = sb.toString
+        } else sb.append(c)
+      } else c match {
+        case '"' => inStr = true; sb.clear()
+        case '{' | '[' => depth += 1
+        case '}' | ']' => depth -= 1; if (depth <= 1) pendingKey = null
+        case ':' =>
+          if (depth == 1 && pendingKey != null) { keys += pendingKey; pendingKey = null }
+        case ',' => if (depth == 1) pendingKey = null
+        case _ => ()
       }
     }
+    keys.toSet
   }
 }

@@ -778,29 +778,16 @@ object CorpusLake {
     * versions) unioned with the non-deleted lake winners.
     *
     * The resolved overlay is referenced TWICE (the id-pruned anti-join
-    * leg and the full-row union leg) and therefore EXECUTES twice — the
-    * documented trade (r18 "Not yet optimized"): the anti leg is
-    * column-pruned to doc_id, so the second execution is a cheap columnar
-    * re-scan, while materializing the overlay would hold full rows (text
-    * included) in executor storage per serve. MEASURED at the r19 1M-doc
-    * scale point (SCALING.md "Round-19", two runs per arm, cal 1.00):
-    * the lazy-checkpoint form lost net — serve-head totals 8.0/8.8 s
-    * (re-scan) vs 10.0/11.0 s (checkpoint); plain snapshot heads
-    * (corpus_delete/replica) gained ~10 % but corpus_optimize, whose
-    * rewrite consumes the snapshot once, paid the full-row
-    * materialization for nothing (2.3/2.6 s → 4.7/4.7 s). The re-scan
-    * stays the default; `SPARK_GRAFT_SNAPSHOT_CKPT=1` keeps the A/B
-    * reproducible (lazy, so analysis-only reads stay jobless). */
-  private def serveSnapshot(base: DataFrame, admitted0: DataFrame): DataFrame = {
-    val admitted =
-      if (sys.env.get("SPARK_GRAFT_SNAPSHOT_CKPT").contains("1"))
-        admitted0.localCheckpoint(false) // lazy: analysis-only reads stay jobless
-      else admitted0
+    * leg and the full-row union leg) and therefore EXECUTES twice. The
+    * anti leg is column-pruned to doc_id, so the second execution is a
+    * cheap columnar re-scan; checkpointing the overlay instead holds full
+    * rows (text included) per serve and lost net at the 1M-doc scale
+    * point (SCALING.md "Round-19"). */
+  private def serveSnapshot(base: DataFrame, admitted: DataFrame): DataFrame =
     base.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_anti")
       .unionByName(
         admitted.filter(!col("_deleted")).drop("epoch", "_deleted"),
         allowMissingColumns = true)
-  }
 
   // ----------------- data skipping (zone-map file stats + pruned reads)
 
@@ -3377,8 +3364,7 @@ object CorpusLake {
       .orderBy(col("doc_id"))
   }
 
-  /** [[optimizeTwin]]'s memoized lake build (bench fixture-charging
-    * hook target — see [[warmTwinFixtures]]). */
+  /** [[optimizeTwin]]'s memoized lake build. */
   private def optLakeDir(spark: SparkSession, dir: String): String =
     graft.sources.Caches.memoizedValue[String](spark,
         s"corpus-opt-lake|$dir") {
@@ -3553,7 +3539,7 @@ object CorpusLake {
     readCorpusAt(spark, dir, replicaLakeDir(spark, dir))
       .orderBy(col("doc_id"))
 
-  /** [[replicaTwin]]'s memoized follower build (bench fixture hook). */
+  /** [[replicaTwin]]'s memoized follower build. */
   private def replicaLakeDir(spark: SparkSession, dir: String): String = {
     val src = deleteLake(spark, dir)
     graft.sources.Caches.memoizedValue[String](spark,
@@ -3564,25 +3550,6 @@ object CorpusLake {
       require(win.contains((Long.MinValue, 2L)), s"bootstrap window: $win")
       d
     }
-  }
-
-  /** Bench fixture-charging hook for the remaining memoized lifecycle
-    * twins (optimize / branch / replica lakes): pre-build them under one
-    * timed `fixture:lifecycle_lakes` entry so their twins' bench numbers
-    * measure serve cost only. The three builds are INDEPENDENT job
-    * chains over their own temp lakes (the shared delete-lake dependency
-    * is already memoized — the bench builds `fixture:delete_lake` first),
-    * so they run from a small pool (guide §2.6): each build's wall is a
-    * ladder of commit barriers (epoch writes, manifest appends, pointer
-    * swaps) whose gaps the other builds' stages back-fill; per-build
-    * work and produced stores are unchanged. */
-  private[graft] def warmTwinFixtures(spark: SparkSession,
-      dir: String): Unit = {
-    val builds: Seq[() => Unit] = Seq(
-      () => { optLakeDir(spark, dir); () },
-      () => { branchLake(spark, dir); () },
-      () => { replicaLakeDir(spark, dir); () })
-    runAll(builds.size, builds)
   }
 
   /** Runs `tasks` on a pool of `threads` (at least one) and returns once

@@ -417,12 +417,6 @@ object Curate {
     }
   }
 
-  /** Bench fixture-charging hook: pre-build the live-card view family
-    * under its own timed `fixture:card_family` entry so the card queries'
-    * bench numbers measure serve cost only. */
-  private[graft] def warmCardFamily(spark: SparkSession,
-      dir: String): Unit = { cardViewDirs(spark, dir); () }
-
   private def cardFold(spark: SparkSession, cells0: DataFrame): DataFrame = {
     import spark.implicits._
     // the card's long form reads the served cells THREE times (totals,

@@ -1331,13 +1331,13 @@ object LakeView {
     * the SHARED refresh path on the twins' standard schedule (consume
     * the LWW-update epoch, compact, consume the delete + re-admission
     * epochs). This is the dashboard multiplicity the engine is built
-    * for, so the driver bench measures [[refreshViews]] at realistic
+    * for, so the fixture exercises [[refreshViews]] at realistic
     * fan-out (two history builds for five views) instead of five solo
     * lifecycles; per-view rows are byte-identical to solo refreshes
     * (the fan-out determinism `LakeViewSpec` pins against solo twins
     * store-for-store), so each twin's oracle is unchanged. The evolve
     * twin stays on SOLO refreshes — its mid-stream `addMeasures` needs
-    * an interleaved schedule, and it keeps the solo path benched. */
+    * an interleaved schedule, and it keeps the solo path exercised. */
   private def familyViews(spark: SparkSession,
       dir: String): Map[String, String] = {
     val lake = CorpusLake.deleteLake(spark, dir)
@@ -1405,9 +1405,9 @@ object LakeView {
   def viewEvolveTwin(spark: SparkSession, dir: String): DataFrame =
     readView(spark, evolveViewDir(spark, dir)).orderBy(col("bucket"))
 
-  /** [[viewEvolveTwin]]'s memoized lifecycle build (bench fixture hook
-    * target — deliberately SOLO-refreshed: the mid-stream addMeasures
-    * needs an interleaved schedule, and it keeps the solo path benched). */
+  /** [[viewEvolveTwin]]'s memoized lifecycle build (deliberately
+    * SOLO-refreshed: the mid-stream addMeasures needs an interleaved
+    * schedule). */
   private def evolveViewDir(spark: SparkSession, dir: String): String = {
     val lake = CorpusLake.deleteLake(spark, dir)
     graft.sources.Caches.memoizedValue[String](spark,
@@ -1559,14 +1559,4 @@ object LakeView {
       (v1, v2)
     }
   }
-
-  /** Bench fixture-charging hooks: pre-build the memoized view fixtures
-    * under their own timed `fixture:*` entries so per-query bench numbers
-    * measure serve cost, not whichever twin touched the family first. */
-  private[graft] def warmFamilyViews(spark: SparkSession,
-      dir: String): Unit = { familyViews(spark, dir); () }
-  private[graft] def warmSharedViews(spark: SparkSession,
-      dir: String): Unit = { sharedViewDirs(spark, dir); () }
-  private[graft] def warmEvolveView(spark: SparkSession,
-      dir: String): Unit = { evolveViewDir(spark, dir); () }
 }

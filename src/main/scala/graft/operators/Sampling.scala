@@ -475,11 +475,6 @@ object Sampling {
       Dedup.clustersOf(spark, lakeVisible(spark, dir))
     }
 
-  /** Bench fixture-charging hook: force the memoized converged cluster
-    * labels of the lake head (the lake-split family's shared input). */
-  private[graft] def warmLakeClusters(spark: SparkSession,
-      dir: String): Unit = { lakeClusters(spark, dir).count(); () }
-
   /** The export a training run actually pulls: the deterministic
     * run-shard manifest ([[CorpusLake.shardManifest]] — per-shard doc/
     * token/char totals + order-independent XOR checksums) of the TRAIN

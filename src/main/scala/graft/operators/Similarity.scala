@@ -94,29 +94,6 @@ object Similarity {
     graft.sources.Caches.memoized(spark, s"sim-pq-codebook|$dir")(
       pqCodebook(corpus(spark, dir), pqStride(nVecs(spark, dir))))
 
-  /** Bench fixture-charging hook: pre-build the per-session INDEX
-    * artifacts the `sim_*` serving queries share — PQ codebook, the
-    * encoded flat code table, the IVF assignment, and the IVFADC inverted
-    * lists — so per-query bench numbers measure SERVE cost instead of
-    * charging whichever sim_* query the session's map order let touch a
-    * one-time build first (r18 read that order shuffle as a sim_topk_pq
-    * 1→4 s "regression"). At 100 TB these are the offline index builds a
-    * serving system runs on its maintenance cadence, exactly the class
-    * the view/card fixture entries already charge separately. Query
-    * RESULT memos (brute-force truth, ranked lists) are NOT warmed —
-    * each query's own serve computation stays timed. */
-  private[graft] def warmIndexes(spark: SparkSession, dir: String): Unit = {
-    val c = corpus(spark, dir)
-    val cb = stridePqCodebook(spark, dir)
-    graft.sources.Caches.shared(pqEncode(c, cb)).count()
-    strideAssigned(spark, dir).count()
-    graft.sources.Caches.memoized(spark, s"sim-ivfpq-lists|$dir")(
-      graft.sources.Caches.shared(
-        pqEncode(strideAssigned(spark, dir), cb, carry = Seq("cent_id"))))
-      .count()
-    ()
-  }
-
   /** The stride-100 query workload every batch `sim_*` operator shares —
     * (query_id, qv, qn). External workloads (an arriving micro-batch) build
     * the same shape and flow through the same `...For` code paths. */

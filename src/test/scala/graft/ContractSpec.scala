@@ -124,108 +124,18 @@ class ContractSpec extends SparkSpec {
       "SELECT 'sum(x) AS s' AS lit FROM t").isEmpty, "string literals are ignored")
   }
 
-  test("bench JSON line fits the harness's retained-output window in the worst case") {
-    // the harness keeps only the last 2000 chars of bench stdout (measured
-    // across BENCH_r01..r07 tails; sbt's trailing success line consumes
-    // ~75); round 6's full-double-precision line overflowed the window and
-    // the round's numbers were lost (BENCH_r06 parsed: null). Bench
-    // degrades per-query precision (2 dp -> 1 dp -> 1 dp for the >=0.95 s
-    // tail only -> 0 dp) and finally COVERAGE (slowest-first entries +
-    // "q_omitted":n) until the line fits — full ms precision always lands
-    // in BENCH_FULL.json — so the invariant is that the emergency level
-    // bounds the line for ANY query count/durations. Worst case: every
-    // query at 99.49 s (max 0-dp width), the realistic-mix case, and the
-    // all-null case must all fit the ~1925-char post-[success] budget.
-    import scala.collection.immutable.ListMap
-    val worst = ListMap(SparkEntry.queries.keys.map(_ -> Option(99.49)).toSeq: _*)
-    val mixed = ListMap(SparkEntry.queries.keys.zipWithIndex.map { case (k, i) =>
-      k -> Option(if (i % 3 == 0) 12.345 else 0.42) }.toSeq: _*)
-    val nulls = ListMap(SparkEntry.queries.keys.map(_ -> Option.empty[Double]).toSeq: _*)
-    // errorful runs spend the errors block from the SAME budget: the
-    // all-fail case is the catastrophic ceiling (capped errors block +
-    // q_omitted map) and must fit like the clean cases
-    val allErrors = SparkEntry.queries.keys.map(k =>
-      k -> ("SparkException: " + ("x" * 120))).toMap
-    val someErrors = allErrors.take(2)
-    Seq((worst, Map.empty[String, String]), (mixed, Map.empty[String, String]),
-        (nulls, Map.empty[String, String]), (worst, someErrors),
-        (nulls, allErrors)).foreach { case (rs, errs) =>
-      val line = Bench.benchLine(rs, errs, 9999.99, "/root/testdata/sf0.1")
-      // by-construction max: the queries map gets LineMax minus the
-      // MEASURED prefix/suffix, so the cap holds for any total width and
-      // sf dir; +75 for sbt's [success] tail stays ≤ 2000. The literal
-      // window bound is asserted INDEPENDENTLY of LineMax so raising the
-      // budget past the window cannot self-certify.
-      assert(line.length <= Bench.LineMax,
-        s"bench line would be ${line.length} chars — emergency truncation failed")
-      assert(line.length <= 1925,
-        s"bench line ${line.length} chars exceeds the post-[success] window")
-      assert(line.contains("\"metric\":\"total\""))
-    }
-    // emergency keeps the slow tail: with every query slow, the omitted
-    // counter appears and at least 60 of the slowest entries survive
-    val w = Bench.benchLine(worst, Map.empty, 9999.99, "sf")
-    assert(w.contains("\"q_omitted\":"), "worst case must reach the emergency level")
-    assert(w.count(_ == ':') >= 60, s"emergency level kept too few entries: $w")
-    // ... and an errorful run still reports both error detail and timings
-    val e = Bench.benchLine(worst, someErrors, 9999.99, "sf")
-    assert(e.contains("\"errors\":{") && e.contains("SparkException"))
-    // catastrophic all-fail: errors block capped, counter present
-    val c = Bench.benchLine(nulls, allErrors, 0.0, "sf")
-    assert(c.contains("\"errors_omitted\":"), "all-fail errors block must cap")
-    // a six-digit total AND a 120-char sf dir squeeze the same cap: the
-    // queries map yields, the line never outgrows the window
-    val long = Bench.benchLine(worst, allErrors, 123456.78,
-      "/some/very/long/" + ("d" * 100) + "/sf9")
-    assert(long.length <= Bench.LineMax,
-      s"long-sfDir line ${long.length} chars broke the by-construction cap")
-  }
-
-  test("bench emergency level fills fast entries as a stable name prefix") {
-    // the kept fast subset must be a deterministic function of the NAMES
-    // (alphabetical prefix), not of formatted entry widths: the r18
-    // shortest-entry-first fill rotated ~15 sub-second names in/out per
-    // round as the budget boundary moved, and the round-over-round
-    // comparator read each rotation as a phantom dropped/new query
-    import scala.collection.immutable.ListMap
-    val rs = ListMap(SparkEntry.queries.keys.zipWithIndex.map { case (k, i) =>
-      k -> Option(if (i % 7 == 0) 30.0 else 0.4)
-    }.toSeq: _*)
-    val line = Bench.benchLine(rs, Map.empty, 999.99, "sf")
-    assert(line.contains("\"q_omitted\":"),
-      "fixture must reach the emergency level")
-    val kept = "\"([a-zA-Z0-9_:]+)\":".r.findAllMatchIn(line)
-      .map(_.group(1)).toSet - "metric" - "q_omitted"
-    val fastAll = rs.collect { case (k, Some(v)) if v < 0.95 => k }.toSeq
-    val keptFast = fastAll.filter(kept)
-    val omittedFast = fastAll.filterNot(kept)
-    assert(keptFast.nonEmpty && omittedFast.nonEmpty,
-      "fixture must split the fast set across the budget boundary")
-    assert(keptFast.max < omittedFast.min,
-      s"kept fast entries are not an alphabetical prefix: kept up to " +
-        s"${keptFast.max} but omitted ${omittedFast.min}")
-  }
-
-  test("refused-steady side-file marker parses and is distinguishable") {
-    // BENCH_STEADY refusal overwrites the side file with an explicit
-    // marker instead of leaving a stale previous-run steady file next to
-    // a fresh FULL file; trend tooling must be able to parse it and skip
-    // the round (metric says refused, value 0, empty queries map)
-    val line = Bench.sideFileJson("total_steady_refused", 0.0,
-      Map.empty[String, Option[Double]],
-      ""","refused":true,"reason":"steady query map identical to cold map","calibration_ratio":1.00""",
-      "/root/testdata/sf0.1")
-    assert(line.contains("\"metric\":\"total_steady_refused\""))
-    assert(line.contains("\"refused\":true"))
-    assert(line.contains("\"queries\":{}"))
-    // parse shape: balanced braces, single line (the .jsonl contract)
-    assert(!line.contains("\n"))
-    assert(line.count(_ == '{') == line.count(_ == '}'))
-    // the normal steady line stays parseable through the same builder
-    val ok = Bench.sideFileJson("total_steady", 1.5,
-      Map("q1" -> Some(1.234), "q2" -> None), ""","calibration_ratio":1.10""",
-      "sf")
-    assert(ok.contains("\"q1\":1.234") && ok.contains("\"q2\":null"))
+  test("an unreadable newest CORRECTNESS file fails the drift check by name") {
+    // read as "nothing to compare", an unreadable file would switch the
+    // key-set shrink alarm off without a trace
+    val root = java.nio.file.Files.createTempDirectory("graft-verify-root")
+    java.nio.file.Files.writeString(root.resolve("CORRECTNESS_r01.json"),
+      """{"q1": {"hash": "x"}, "q2": {"hash": "y"}}""")
+    assert(Verify.previouslyGreen(root.toFile).contains(Set("q1", "q2")))
+    java.nio.file.Files.write(root.resolve("CORRECTNESS_r99.json"),
+      Array[Byte]('{'.toByte, 0xc3.toByte, 0x28, '}'.toByte))
+    val e = intercept[IllegalStateException](Verify.previouslyGreen(root.toFile))
+    assert(e.getMessage.contains("CORRECTNESS_r99.json"), e.getMessage)
+    assert(e.getCause.isInstanceOf[java.nio.charset.MalformedInputException])
   }
 }
 
