@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.functions.Text.tokens
 import graft.sources.Tables
+import graft.storage.LakeCursor
 
 /** The versioned training-corpus lake: admission-gated ingest with a
   * manifest-last commit protocol and manifest-pinned time travel.
@@ -144,18 +145,6 @@ object CorpusLake {
     * may carry EVOLVED schemas (extra metadata columns added mid-stream)
     * — older epochs serve nulls there. The footer-union cost is
     * file-count-proportional, which the OPTIMIZE passes bound. */
-  /** One-row cursor artifact read (max last_version), listing-signature
-    * memoized: every refresh path re-reads its cursor per firing — a
-    * schema-inference job plus a max() collect each time; the cursor
-    * swap rewrites the dir, so the signature invalidates at the write. */
-  private[operators] def cursorValue(spark: SparkSession,
-      cPath: String): Long = {
-    import spark.implicits._
-    graft.sources.Caches.bySignature[Long](spark, "lake_cursor", cPath) {
-      spark.read.parquet(cPath).agg(max(col("last_version"))).as[Long].head()
-    }
-  }
-
   private[graft] def readStore(spark: SparkSession, corpusDir: String,
       name: String): Option[DataFrame] = {
     val p = Similarity.resolveArtifact(spark, corpusDir,
@@ -371,7 +360,7 @@ object CorpusLake {
 
   /** `collapseReplays = false` skips the (doc_id, epoch[, tag]) replay
     * dedup — ONLY for consumers that end in a latest-row-per-doc resolve
-    * (`row_number() = 1` over doc_id): replay copies are byte-identical
+    * ([[Ingest.latestPerKey]] over doc_id): replay copies are byte-identical
     * by contract and the pair-aware committed filter already excludes
     * different-tag orphans, so the rank picks identical content whichever
     * physical copy wins — and the dedup's own exchange + sort aggregate
@@ -726,9 +715,7 @@ object CorpusLake {
     * ([[readCorpusAtRange]]): both feed it rows that are complete for
     * every doc_id they contain, which is all LWW needs. */
   private def resolveLatestAdmitted(rows: DataFrame): DataFrame = {
-    val resolved = rows.withColumn("_rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("epoch").desc)))
-      .filter(col("_rn") === 1).drop("_rn")
+    val resolved = Ingest.latestPerKey(rows, "doc_id", col("epoch"))
     if (resolved.columns.contains("_deleted"))
       resolved.withColumn("_deleted", coalesce(col("_deleted"), lit(false)))
     else resolved.withColumn("_deleted", lit(false))
@@ -749,10 +736,8 @@ object CorpusLake {
     val flagged = committed
       .filter(coalesce(col("_deleted"), lit(false)))
       .select(col("doc_id")).distinct()
-    committed.join(flagged, Seq("doc_id"), "left_semi")
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("epoch").desc)))
-      .filter(col("_rn") === 1)
+    Ingest.latestPerKey(committed.join(flagged, Seq("doc_id"), "left_semi"),
+        "doc_id", col("epoch"))
       .filter(coalesce(col("_deleted"), lit(false)))
       .select(col("doc_id"))
   }
@@ -1274,40 +1259,25 @@ object CorpusLake {
     * its own — its next apply would LWW-stomp them. Returns the
     * follower version committed, or None when already caught up. */
   def replicateLake(spark: SparkSession, dir: String, srcCorpusDir: String,
-      dstCorpusDir: String): Option[(Long, Long)] = {
-    import spark.implicits._
-    val cPath = Similarity.resolveArtifact(spark, dstCorpusDir,
-      "replica_cursor")
-    val from =
-      if (graft.sources.Formats.pathExists(spark, cPath))
-        cursorValue(spark, cPath)
-      else Long.MinValue
-    val floor = retentionFloor(spark, srcCorpusDir)
-    require(from >= floor || from == Long.MinValue,
-      s"replica cursor $from predates the primary's retention floor " +
-        s"$floor: the history this window needs was vacuumed — re-seed " +
-        "the replica from a fresh bootstrap window")
-    val head = manifest(spark, srcCorpusDir)
-      .filter(col("version") > from)
-      .agg(max(col("version"))).as[Option[Long]].head()
-    head match {
-      case Some(h) =>
-        val changes = readCorpusChanges(spark, dir, srcCorpusDir, from,
-          Some(h))
-        val extras = changes.columns
-          .filterNot(Set("doc_id", "text", "version", "change_type")).toSeq
-        val net = changes.select(
-          Seq(col("doc_id"), col("text"),
-            (col("change_type") === "delete").as("_deleted"),
-            col("version").as("epoch")) ++ extras.map(col): _*)
-        commitNetEffect(spark, net, dstCorpusDir, allowFollower = true)
-        Seq(h).toDF("last_version").write.mode("overwrite")
-          .parquet(s"$dstCorpusDir/replica_cursor_compacting")
-        Similarity.swapArtifact(spark, dstCorpusDir, "replica_cursor")
-        Some((from, h))
-      case None => None
+      dstCorpusDir: String): Option[(Long, Long)] =
+    LakeCursor.consume(spark, dstCorpusDir, "replica_cursor",
+        manifest(spark, srcCorpusDir)) { from =>
+      val floor = retentionFloor(spark, srcCorpusDir)
+      require(from >= floor || from == Long.MinValue,
+        s"replica cursor $from predates the primary's retention floor " +
+          s"$floor: the history this window needs was vacuumed — re-seed " +
+          "the replica from a fresh bootstrap window")
+    } { (from, h) =>
+      val changes = readCorpusChanges(spark, dir, srcCorpusDir, from,
+        Some(h))
+      val extras = changes.columns
+        .filterNot(Set("doc_id", "text", "version", "change_type")).toSeq
+      val net = changes.select(
+        Seq(col("doc_id"), col("text"),
+          (col("change_type") === "delete").as("_deleted"),
+          col("version").as("epoch")) ++ extras.map(col): _*)
+      commitNetEffect(spark, net, dstCorpusDir, allowFollower = true)
     }
-  }
 
   /** Delete a branch and release its hold on the parent's history (the
     * `branch_<name>` pinned run). The branch dir and everything it
@@ -1793,11 +1763,9 @@ object CorpusLake {
       else lit(false)
     // collapseReplays = false: both consumers below resolve latest-per-doc
     val raw = admittedRaw(spark, corpusDir, collapseReplays = false)
-    val changed0 = committedRows(raw.filter(col("epoch") > fromVersion),
-        winMan)
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("epoch").desc)))
-      .filter(col("_rn") === 1).drop("_rn")
+    val changed0 = Ingest.latestPerKey(
+      committedRows(raw.filter(col("epoch") > fromVersion), winMan),
+      "doc_id", col("epoch"))
     // the changed set is CDC-window-sized by contract and consumed three
     // times (the feed output, the prior-state semi-join, the base-shadow
     // anti-join) — checkpoint it so the store scan + LWW window execute
@@ -1813,12 +1781,11 @@ object CorpusLake {
     // row — a tombstone at the cursor both hides the doc and shadows its
     // base row, exactly the readCorpusAt contract. Pruned to the changed
     // ids first, so the window runs over candidate history only.
-    val priorLatest = committedRows(raw.filter(col("epoch") <= fromVersion),
-        man.filter(col("version") <= fromVersion))
-      .join(changedIds, Seq("doc_id"), "left_semi")
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("epoch").desc)))
-      .filter(col("_rn") === 1).drop("_rn")
+    val priorLatest = Ingest.latestPerKey(
+      committedRows(raw.filter(col("epoch") <= fromVersion),
+          man.filter(col("version") <= fromVersion))
+        .join(changedIds, Seq("doc_id"), "left_semi"),
+      "doc_id", col("epoch"))
     val priorVisible = priorLatest
       .withColumn("_del", deletedFlag(priorLatest))
       .filter(!col("_del")).select(col("doc_id"))
@@ -1853,47 +1820,34 @@ object CorpusLake {
     * (doc_id, tok, epoch) read-side dedup collapses — and an LWW update
     * consumes as a whole-document replacement because
     * [[TextAnalysis.readPostingsDelta]] serves only each doc's latest
-    * epoch. Cursor write is LAST (crash-safe ordering) via the same
-    * tmp-swap the compactors use. Returns the (from, to] window consumed,
-    * or None when the cursor is already at the lake head. */
+    * epoch. The cursor is advanced LAST ([[LakeCursor.consume]]). Returns
+    * the (from, to] window consumed, or None when the cursor is already
+    * at the lake head. */
   def refreshPostingsFromLake(spark: SparkSession, dir: String,
-      corpusDir: String, maintDir: String): Option[(Long, Long)] = {
-    import spark.implicits._
-    val cPath = Similarity.resolveArtifact(spark, maintDir, "lake_cursor")
-    val from =
-      if (graft.sources.Formats.pathExists(spark, cPath))
-        cursorValue(spark, cPath)
-      else Long.MinValue
-    val head = manifest(spark, corpusDir).agg(max($"version"))
-      .as[Option[Long]].head()
-    head match {
-      case Some(latest) if latest > from =>
-        val changes = readCorpusChanges(spark, dir, corpusDir, from,
-          Some(latest))
-        val upserts = TextAnalysis.encodeForPostings(
-            changes.filter($"change_type" =!= "delete")
-              .select($"doc_id", $"text", $"version".as("epoch")),
-            carry = Seq("epoch"))
-          .select($"doc_id", $"dl", $"tok", $"tf", $"epoch")
-        // a delete retracts as a TOMBSTONE posting row: null token, so the
-        // doc is re-listed in the delta (the anti-join merge drops its
-        // base/older postings) while contributing zero scorable rows —
-        // the null key can never equi-join a query term. Types mirror the
-        // encode exactly so the parquet append stays schema-stable.
-        val tombstones = changes.filter($"change_type" === "delete")
-          .select($"doc_id", lit(null).cast("int").as("dl"),
-            lit(null).cast("string").as("tok"),
-            lit(null).cast("long").as("tf"), $"version".as("epoch"))
-        upserts.unionByName(tombstones)
-          .write.mode("append").parquet(
-            Similarity.appendTarget(spark, s"$maintDir/seg"))
-        Seq(latest).toDF("last_version")
-          .write.mode("overwrite").parquet(s"$maintDir/lake_cursor_compacting")
-        Similarity.swapArtifact(spark, maintDir, "lake_cursor")
-        Some((from, latest))
-      case _ => None
+      corpusDir: String, maintDir: String): Option[(Long, Long)] =
+    LakeCursor.consume(spark, maintDir, "lake_cursor",
+        manifest(spark, corpusDir))(_ => ()) { (from, latest) =>
+      import spark.implicits._
+      val changes = readCorpusChanges(spark, dir, corpusDir, from,
+        Some(latest))
+      val upserts = TextAnalysis.encodeForPostings(
+          changes.filter($"change_type" =!= "delete")
+            .select($"doc_id", $"text", $"version".as("epoch")),
+          carry = Seq("epoch"))
+        .select($"doc_id", $"dl", $"tok", $"tf", $"epoch")
+      // a delete retracts as a TOMBSTONE posting row: null token, so the
+      // doc is re-listed in the delta (the anti-join merge drops its
+      // base/older postings) while contributing zero scorable rows —
+      // the null key can never equi-join a query term. Types mirror the
+      // encode exactly so the parquet append stays schema-stable.
+      val tombstones = changes.filter($"change_type" === "delete")
+        .select($"doc_id", lit(null).cast("int").as("dl"),
+          lit(null).cast("string").as("tok"),
+          lit(null).cast("long").as("tf"), $"version".as("epoch"))
+      upserts.unionByName(tombstones)
+        .write.mode("append").parquet(
+          Similarity.appendTarget(spark, s"$maintDir/seg"))
     }
-  }
 
   /** Lake-commit-driven DENSE index refresh — [[refreshPostingsFromLake]]'s
     * twin for the IVF-PQ leg, closing the loop where ONE commit feed
@@ -1907,9 +1861,9 @@ object CorpusLake {
     * the PINNED quantizers ([[Similarity.encodeForIndex]] — the FAISS
     * IVF-add contract) and appended stamped with their committed lake
     * version, so a crashed refresh re-appends byte-identical rows that
-    * [[Similarity.readIndexDelta]]'s (vec_id, epoch) dedup collapses, and
+    * [[Similarity.readIndexDelta]]'s latest-epoch rank collapses, and
     * an LWW re-embedding deterministically wins (latest epoch per key).
-    * Cursor written LAST via the tmp-swap.
+    * The cursor is advanced LAST ([[LakeCursor.consume]]).
     *
     * `embed` receives only the feed's insert/update rows (a delete has no
     * text to embed); `delete` rows are retracted here: `deleteVecIds`
@@ -1924,47 +1878,34 @@ object CorpusLake {
       corpusDir: String, maintDir: String,
       embed: DataFrame => DataFrame,
       deleteVecIds: DataFrame => DataFrame =
-        _.select(col("doc_id").as("vec_id"), col("version"))): Option[(Long, Long)] = {
-    import spark.implicits._
-    val cPath = Similarity.resolveArtifact(spark, maintDir, "dense_lake_cursor")
-    val from =
-      if (graft.sources.Formats.pathExists(spark, cPath))
-        cursorValue(spark, cPath)
-      else Long.MinValue
-    val head = manifest(spark, corpusDir).agg(max($"version"))
-      .as[Option[Long]].head()
-    head match {
-      case Some(latest) if latest > from =>
-        val changes = readCorpusChanges(spark, dir, corpusDir, from,
-          Some(latest)).localCheckpoint()
-        // localCheckpoint: embed is "an inference job over the window" —
-        // the encode and the version join must read ONE materialized
-        // result, not re-run the inference (and a nondeterministic embed
-        // must not diverge between the two branches)
-        val vecs = embed(changes.filter($"change_type" =!= "delete"))
-          .localCheckpoint()
-        val enc = Similarity.encodeForIndex(spark, dir,
-          vecs.select($"vec_id", $"embedding"))
-        val encCols = enc.columns
-        val upserts = enc
-          .join(broadcast(vecs.select($"vec_id", $"version")), "vec_id")
-          .select(encCols.toIndexedSeq.map(col) :+ $"version".as("epoch"): _*)
-        val tombstones = deleteVecIds(
-            changes.filter($"change_type" === "delete"))
-          .select(col("vec_id") +:
-            enc.schema.fields.filterNot(_.name == "vec_id").toSeq
-              .map(f => lit(null).cast(f.dataType).as(f.name)) :+
-            col("version").as("epoch"): _*)
-        upserts.unionByName(tombstones)
-          .write.mode("append").parquet(
-            Similarity.appendTarget(spark, s"$maintDir/lists"))
-        Seq(latest).toDF("last_version").write.mode("overwrite")
-          .parquet(s"$maintDir/dense_lake_cursor_compacting")
-        Similarity.swapArtifact(spark, maintDir, "dense_lake_cursor")
-        Some((from, latest))
-      case _ => None
+        _.select(col("doc_id").as("vec_id"), col("version"))): Option[(Long, Long)] =
+    LakeCursor.consume(spark, maintDir, "dense_lake_cursor",
+        manifest(spark, corpusDir))(_ => ()) { (from, latest) =>
+      import spark.implicits._
+      val changes = readCorpusChanges(spark, dir, corpusDir, from,
+        Some(latest)).localCheckpoint()
+      // localCheckpoint: embed is "an inference job over the window" —
+      // the encode and the version join must read ONE materialized
+      // result, not re-run the inference (and a nondeterministic embed
+      // must not diverge between the two branches)
+      val vecs = embed(changes.filter($"change_type" =!= "delete"))
+        .localCheckpoint()
+      val enc = Similarity.encodeForIndex(spark, dir,
+        vecs.select($"vec_id", $"embedding"))
+      val encCols = enc.columns
+      val upserts = enc
+        .join(broadcast(vecs.select($"vec_id", $"version")), "vec_id")
+        .select(encCols.toIndexedSeq.map(col) :+ $"version".as("epoch"): _*)
+      val tombstones = deleteVecIds(
+          changes.filter($"change_type" === "delete"))
+        .select(col("vec_id") +:
+          enc.schema.fields.filterNot(_.name == "vec_id").toSeq
+            .map(f => lit(null).cast(f.dataType).as(f.name)) :+
+          col("version").as("epoch"): _*)
+      upserts.unionByName(tombstones)
+        .write.mode("append").parquet(
+          Similarity.appendTarget(spark, s"$maintDir/lists"))
     }
-  }
 
   // ------------- incrementally-maintained materialized profile
 
@@ -2063,7 +2004,8 @@ object CorpusLake {
   /** Incremental materialized-view maintenance from lake commits: append
     * the signed profile deltas of every committed version past the cursor
     * ([[windowDeltas]] — ONE pass for the whole window) keyed
-    * (band, version), then advance the cursor (tmp-swap, written LAST).
+    * (band, version), then advance the cursor LAST
+    * ([[LakeCursor.consume]]).
     * Cost per refresh ∝ the committed window's changed docs — the view
     * never recomputes over the corpus.
     * Crash anywhere: the cursor stays behind, the re-run recomputes byte-
@@ -2072,45 +2014,32 @@ object CorpusLake {
     * epoch-stamped store in the library. Returns the (from, to] window
     * consumed, or None at the lake head. */
   def refreshProfileFromLake(spark: SparkSession, dir: String,
-      corpusDir: String, profDir: String): Option[(Long, Long)] = {
-    import spark.implicits._
-    val cPath = Similarity.resolveArtifact(spark, profDir, "cursor")
-    val from =
-      if (graft.sources.Formats.pathExists(spark, cPath))
-        cursorValue(spark, cPath)
-      else Long.MinValue
-    // a vacuum past the cursor collapsed history this window's retractions
-    // need (the lag would see the floor-state instead of the version the
-    // consumed deltas retracted against — silently wrong forever). A fresh
-    // bootstrap (no deltas ever written) is safe at any floor: its deltas
-    // telescope from whatever floor-state survives. Same refusal contract
-    // as readCorpusChanges, for the same reason.
-    val floor = retentionFloor(spark, corpusDir)
-    require(from >= floor ||
-        (from == Long.MinValue &&
-          !graft.sources.Formats.pathExists(spark,
-            Similarity.resolveArtifact(spark, profDir, "delta"))),
-      s"profile cursor $from predates the retention floor $floor: the " +
-        "history this window's retractions need was vacuumed — rebuild " +
-        "the view (initProfile + fresh refresh) instead")
-    val head = manifest(spark, corpusDir)
-      .filter(col("version") > from)
-      .agg(max(col("version"))).as[Option[Long]].head()
-    head match {
-      case Some(h) =>
-        // resolve before the append: an interrupted compaction swap must
-        // promote the surviving `delta_compacting` FIRST, or this append
-        // would create a fresh main dir that strands it forever
-        windowDeltas(spark, dir, corpusDir, from, h)
-          .write.mode("append").parquet(
-            Similarity.resolveArtifact(spark, profDir, "delta"))
-        Seq(h).toDF("last_version")
-          .write.mode("overwrite").parquet(s"$profDir/cursor_compacting")
-        Similarity.swapArtifact(spark, profDir, "cursor")
-        Some((from, h))
-      case None => None
+      corpusDir: String, profDir: String): Option[(Long, Long)] =
+    LakeCursor.consume(spark, profDir, "cursor",
+        manifest(spark, corpusDir)) { from =>
+      // a vacuum past the cursor collapsed history this window's
+      // retractions need (the lag would see the floor-state instead of
+      // the version the consumed deltas retracted against — silently
+      // wrong forever). A fresh bootstrap (no deltas ever written) is
+      // safe at any floor: its deltas telescope from whatever floor-state
+      // survives. Same refusal contract as readCorpusChanges, for the
+      // same reason.
+      val floor = retentionFloor(spark, corpusDir)
+      require(from >= floor ||
+          (from == Long.MinValue &&
+            !graft.sources.Formats.pathExists(spark,
+              Similarity.resolveArtifact(spark, profDir, "delta"))),
+        s"profile cursor $from predates the retention floor $floor: the " +
+          "history this window's retractions need was vacuumed — rebuild " +
+          "the view (initProfile + fresh refresh) instead")
+    } { (from, h) =>
+      // resolve before the append: an interrupted compaction swap must
+      // promote the surviving `delta_compacting` FIRST, or this append
+      // would create a fresh main dir that strands it forever
+      windowDeltas(spark, dir, corpusDir, from, h)
+        .write.mode("append").parquet(
+          Similarity.resolveArtifact(spark, profDir, "delta"))
     }
-  }
 
   /** Serve the maintained profile: base + deduped signed deltas ABOVE the
     * base's folded-through watermark, summed per band; bands whose every
@@ -2987,10 +2916,8 @@ object CorpusLake {
     // would lose the adoption exclusion for surviving history
     val committed = committedRows(raw, manDf, keepTag = true)
     val recent = committed.filter(col("epoch") > retainFrom)
-    val floorState = committed.filter(col("epoch") <= retainFrom)
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("epoch").desc)))
-      .filter(col("_rn") === 1).drop("_rn")
+    val floorState = Ingest.latestPerKey(
+      committed.filter(col("epoch") <= retainFrom), "doc_id", col("epoch"))
     // uncommitted rows ABOVE the committed head may be a live stream's
     // in-flight epoch (data lands before the manifest row — deleting it
     // here would let the imminent manifest commit an emptied epoch);
@@ -3164,9 +3091,8 @@ object CorpusLake {
     val branchBase = parentOf(spark, corpusDir).map(_._2)
     val liveBranches = branches(spark, corpusDir).count()
     val replicaCursor = {
-      val p = Similarity.resolveArtifact(spark, corpusDir, "replica_cursor")
-      if (!graft.sources.Formats.pathExists(spark, p)) -1L
-      else cursorValue(spark, p)
+      val c = LakeCursor.read(spark, corpusDir, "replica_cursor")
+      if (c == Long.MinValue) -1L else c
     }
     Seq(
       ("committed_epochs", committedN),
@@ -3206,21 +3132,16 @@ object CorpusLake {
     import spark.implicits._
     val man = manifest(spark, corpusDir)
     val head = man.agg(max($"version")).as[Option[Long]].head().getOrElse(-1L)
-    def cursor(dir: String, name: String): Long = {
-      val p = Similarity.resolveArtifact(spark, dir, name)
-      if (!graft.sources.Formats.pathExists(spark, p)) Long.MinValue
-      else cursorValue(spark, p)
-    }
     def leaf(d: String): String = d.split('/').filter(_.nonEmpty).last
     val legs =
       maintDir.toSeq.flatMap(m => Seq(
-        "postings" -> cursor(m, "lake_cursor"),
-        "dense" -> cursor(m, "dense_lake_cursor"))) ++
-      profDir.toSeq.map(p => "profile" -> cursor(p, "cursor")) ++
-      viewDirs.map(v => s"view:${leaf(v)}" -> cursor(v, "cursor")) ++
-      replicaDirs.map(r =>
-        s"replica:${leaf(r)}" -> cursor(r, "replica_cursor"))
-    legs.map { case (name, c) =>
+        "postings" -> (m, "lake_cursor"),
+        "dense" -> (m, "dense_lake_cursor"))) ++
+      profDir.toSeq.map(p => "profile" -> (p, "cursor")) ++
+      viewDirs.map(v => s"view:${leaf(v)}" -> (v, "cursor")) ++
+      replicaDirs.map(r => s"replica:${leaf(r)}" -> (r, "replica_cursor"))
+    legs.map { case (name, (d, cursorName)) =>
+      val c = LakeCursor.read(spark, d, cursorName)
       val lag = man.filter($"version" > c).count()
       (name, if (c == Long.MinValue) -1L else c, head, lag)
     }.toDF("consumer", "cursor_version", "head_version", "lag_commits")
@@ -3552,21 +3473,24 @@ object CorpusLake {
     }
   }
 
-  /** Runs `tasks` on a pool of `threads` (at least one) and returns once
-    * EVERY task has finished; the first failure, in task order, is
-    * rethrown only then, so no task is still writing when the call
-    * fails. */
-  private[graft] def runAll(threads: Int, tasks: Seq[() => Unit]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, threads))
-    try {
-      val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      tasks.map(t => scala.concurrent.Future(t())(ec))
-        .map(f => scala.util.Try(scala.concurrent.Await.result(f,
-          scala.concurrent.duration.Duration.Inf)))
+  /** Runs `tasks` on a pool of `threads` and returns once EVERY task has
+    * finished; the first failure, in task order, is rethrown only then,
+    * so no task is still writing when the call fails. One thread runs
+    * the tasks in order on the calling thread. */
+  private[graft] def runAll(threads: Int, tasks: Seq[() => Unit]): Unit =
+    if (threads <= 1)
+      tasks.map(t => scala.util.Try(t()))
         .collectFirst { case scala.util.Failure(e) => throw e }
-    } finally pool.shutdown()
-  }
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+      try {
+        val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
+        tasks.map(t => scala.concurrent.Future(t())(ec))
+          .map(f => scala.util.Try(scala.concurrent.Await.result(f,
+            scala.concurrent.duration.Duration.Inf)))
+          .collectFirst { case scala.util.Failure(e) => throw e }
+      } finally pool.shutdown()
+    }
 
   /** [[createBranch]]'s oracled twin, branch leg: the branch head after
     * the [[branchLake]] lifecycle. DuckDB recomputes the visible set —

@@ -428,16 +428,10 @@ object Dedup {
   }
 
   /** Replay-safe doc-level latest-wins read of the appended documents'
-    * lake partition ((doc_id, text, epoch) rows). Resolves an interrupted
-    * coalesce swap first — the store is mutable at exactly that boundary. */
-  def readDocsDelta(spark: SparkSession, docsDir: String): DataFrame = {
-    val raw = spark.read.parquet(
-      graft.operators.Similarity.appendTarget(spark, docsDir))
-    raw.dropDuplicates("doc_id", "epoch")
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col("doc_id")).orderBy(col("epoch").desc)))
-      .filter(col("_rn") === 1).drop("_rn", "epoch")
-  }
+    * lake partition ((doc_id, text, epoch) rows;
+    * [[graft.operators.Similarity.readEpochDelta]] on doc_id). */
+  def readDocsDelta(spark: SparkSession, docsDir: String): DataFrame =
+    graft.operators.Similarity.readEpochDelta(spark, docsDir, "doc_id")
 
   /** Dedup an arriving (doc_id, text) batch against the PERSISTED corpus
     * index, optionally ∪ an appended delta store: the arriving side signs
@@ -496,11 +490,9 @@ object Dedup {
     // rows only, not the whole appended store per batch
     val resolvedDelta = deltaDocs.map { d =>
       if (!d.columns.contains("epoch")) d.select($"doc_id", $"text")
-      else d.join(candIds, Seq("doc_id"), "left_semi")
-        .dropDuplicates("doc_id", "epoch")
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy($"doc_id").orderBy($"epoch".desc)))
-        .filter($"_rn" === 1).select($"doc_id", $"text")
+      else graft.operators.Ingest.latestPerKey(
+          d.join(candIds, Seq("doc_id"), "left_semi"), "doc_id", $"epoch")
+        .select($"doc_id", $"text")
     }
     val lakeDocs = resolvedDelta.fold(Tables.spread(Tables.documents(spark, dir))) { d =>
       Tables.spread(Tables.documents(spark, dir))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
+import graft.storage.LakeCursor
 
 /** USER-DECLARED incremental materialized views over the corpus lake —
   * the profile view's signed-retraction algebra ([[CorpusLake]]'s
@@ -665,20 +666,6 @@ object LakeView {
   private[graft] val extSnapshotScans =
     new java.util.concurrent.atomic.AtomicLong
 
-  /** The view's consumed cursor (−∞ when never refreshed). */
-  private def cursorOf(spark: SparkSession, viewDir: String): Long = {
-    import spark.implicits._
-    val cPath = Similarity.resolveArtifact(spark, viewDir, "cursor")
-    if (graft.sources.Formats.pathExists(spark, cPath))
-      // listing-signature memo: the cursor is a one-row artifact read on
-      // every refresh and serve; its swap rewrites the dir, so the
-      // signature invalidates exactly at the write
-      graft.sources.Caches.bySignature[Long](spark, "view_cursor", cPath) {
-        spark.read.parquet(cPath).agg(max($"last_version")).as[Long].head()
-      }
-    else Long.MinValue
-  }
-
   /** The floor refusal every refresh runs: a cursor below the retention
     * floor lost the history its retractions need. */
   private def requireAboveFloor(spark: SparkSession, viewDir: String,
@@ -692,9 +679,8 @@ object LakeView {
         "the view instead")
 
   /** One view's (from, h] window over a prebuilt history frame: delta
-    * append, ext append (non-additive measures only), cursor swap —
-    * the crash-ordering shared by [[refreshViewFromLake]] and
-    * [[refreshViews]]. `seq` must be the changed-docs history of a
+    * append, ext append (non-additive measures only), cursor write LAST
+    * ([[LakeCursor.write]]). `seq` must be the changed-docs history of a
     * window STARTING AT OR BELOW `from` (rows with epoch ≤ from are
     * filtered here — prev_text stays exact because the lag ran over the
     * full history), carrying at least this view's enrichment columns. */
@@ -702,7 +688,6 @@ object LakeView {
       corpusDir: String, viewDir: String, spec: ViewSpec, from: Long,
       h: Long, seq0: DataFrame, sharedHistory: Boolean,
       unchangedInputs: Option[() => DataFrame] = None): Unit = {
-    import spark.implicits._
     val ViewSpec(dims, sums0, mins, maxs, avgs, dists, quants, baseCols) =
       spec
     val measures = internalSums(sums0, avgs)
@@ -738,43 +723,22 @@ object LakeView {
         System.err.println(s"[viewtiming]   ext leg=" +
           s"${(System.nanoTime() - tExt) / 1000000}ms view=$viewDir")
     }
-    Seq(h).toDF("last_version")
-      .write.mode("overwrite").parquet(s"$viewDir/cursor_compacting")
-    Similarity.swapArtifact(spark, viewDir, "cursor")
+    LakeCursor.write(spark, viewDir, "cursor", h)
   }
 
   /** Consume the lake's commits past the cursor into signed delta rows —
     * the profile refresh generalized; same floor-refusal, same
-    * cursor-written-LAST crash ordering, same idempotent replay. Returns
-    * the (from, to] window, or None at the lake head. */
+    * cursor-written-LAST crash ordering, same idempotent replay. The
+    * one-view case of [[refreshViews]]. `upTo` = bounded catch-up
+    * (consume history in operator-sized bites); the per-version delta
+    * rows are identical however the window is split, so any split serves
+    * the same view. Returns the (from, to] window, or None at the lake
+    * head. */
   def refreshViewFromLake(spark: SparkSession, dir: String,
       corpusDir: String, viewDir: String,
       upTo: Option[Long] = None,
-      compactEvery: Int = 0): Option[(Long, Long)] = {
-    import spark.implicits._
-    val spec = viewSpecFull(spark, viewDir)
-    val from = cursorOf(spark, viewDir)
-    requireAboveFloor(spark, viewDir, from,
-      CorpusLake.retentionFloor(spark, corpusDir))
-    // upTo = bounded catch-up (consume history in operator-sized bites);
-    // the per-version delta rows are identical however the window is
-    // split, so any split serves the same view
-    val head = upTo.fold(CorpusLake.manifest(spark, corpusDir))(u =>
-        CorpusLake.manifest(spark, corpusDir).filter(col("version") <= u))
-      .filter(col("version") > from)
-      .agg(max(col("version"))).as[Option[Long]].head()
-    head match {
-      case Some(h) =>
-        historyScans.incrementAndGet()
-        val seq = changedHistory(spark, dir, corpusDir, from, h,
-          spec.baseCols)
-        refreshOne(spark, dir, corpusDir, viewDir, spec, from, h, seq,
-          sharedHistory = false)
-        maybeAutoCompact(spark, viewDir, h, compactEvery)
-        Some((from, h))
-      case None => None
-    }
-  }
+      compactEvery: Int = 0): Option[(Long, Long)] =
+    refreshWindow(spark, dir, corpusDir, Seq(viewDir), upTo, compactEvery)
 
   /** Auto-compaction cadence for the refresh paths: fold the view's
     * delta/ext backlog into the base once `compactEvery` lake versions
@@ -838,29 +802,37 @@ object LakeView {
     * version consumed, or None when every view is already there. */
   def refreshViews(spark: SparkSession, dir: String, corpusDir: String,
       viewDirs: Seq[String], upTo: Option[Long] = None,
-      compactEvery: Int = 0): Option[Long] = {
-    import spark.implicits._
+      compactEvery: Int = 0): Option[Long] =
+    refreshWindow(spark, dir, corpusDir, viewDirs, upTo, compactEvery)
+      .map(_._2)
+
+  /** [[refreshViews]]' body, returning the (minimum cursor, head] window
+    * consumed. One view keeps the solo plan: its history is not
+    * materialized up front (only [[refreshOne]]'s ext leg checkpoints it)
+    * and it refreshes on the calling thread. */
+  private def refreshWindow(spark: SparkSession, dir: String,
+      corpusDir: String, viewDirs: Seq[String], upTo: Option[Long],
+      compactEvery: Int): Option[(Long, Long)] = {
     require(viewDirs.nonEmpty, "refreshViews: no views given")
     require(viewDirs.distinct.size == viewDirs.size,
       s"refreshViews: duplicate view dirs in ${viewDirs.mkString(", ")}")
     val floor = CorpusLake.retentionFloor(spark, corpusDir)
     val states = viewDirs.map { vd =>
-      val from = cursorOf(spark, vd)
+      val from = LakeCursor.read(spark, vd, "cursor")
       requireAboveFloor(spark, vd, from, floor)
       (vd, viewSpecFull(spark, vd), from)
     }
     val fromMin = states.map(_._3).min
-    val head = upTo.fold(CorpusLake.manifest(spark, corpusDir))(u =>
-        CorpusLake.manifest(spark, corpusDir).filter(col("version") <= u))
-      .filter(col("version") > fromMin)
-      .agg(max(col("version"))).as[Option[Long]].head()
-    head match {
+    val solo = states.size == 1
+    LakeCursor.headAbove(CorpusLake.manifest(spark, corpusDir), fromMin,
+        upTo) match {
       case Some(h) =>
         val allBaseCols = states.flatMap(_._2.baseCols).distinct
         historyScans.incrementAndGet()
         val t0 = System.nanoTime()
-        val shared = changedHistory(spark, dir, corpusDir, fromMin, h,
-          allBaseCols).localCheckpoint()
+        val history = changedHistory(spark, dir, corpusDir, fromMin, h,
+          allBaseCols)
+        val shared = if (solo) history else history.localCheckpoint()
         // ONE retraction-recompute snapshot scan per refresh window, not
         // one per ext view (the r18-measured cost split: ~3-4 s per ext
         // view per window vs ~0.5 s for purely-additive views — the
@@ -927,7 +899,7 @@ object LakeView {
           behind.map { case (vd, spec, from) => () => {
             val tv = System.nanoTime()
             refreshOne(spark, dir, corpusDir, vd, spec,
-              from, h, shared, sharedHistory = true,
+              from, h, shared, sharedHistory = !solo,
               unchangedInputs = sharedUnchanged.get(vd))
             maybeAutoCompact(spark, vd, h, compactEvery)
             // env-gated cost split (SPARK_GRAFT_VIEW_TIMING=1): which
@@ -940,7 +912,7 @@ object LakeView {
         if (sys.env.contains("SPARK_GRAFT_VIEW_TIMING"))
           System.err.println(s"[viewtiming] window=($fromMin,$h] shared=" +
             s"${(tShared - t0) / 1000000}ms")
-        Some(h)
+        Some((fromMin, h))
       case None => None
     }
   }
@@ -1158,11 +1130,7 @@ object LakeView {
     // reads schema-lottery)
     foldAndDrainStores(spark, viewDir, "addMeasures")
     // 2. backfill the new measures at the view's cursor
-    val cPath = Similarity.resolveArtifact(spark, viewDir, "cursor")
-    val cursor =
-      if (graft.sources.Formats.pathExists(spark, cPath))
-        CorpusLake.cursorValue(spark, cPath)
-      else Long.MinValue
+    val cursor = LakeCursor.read(spark, viewDir, "cursor")
     val source = enrich(spark, dir,
       if (cursor == Long.MinValue)
         Tables.spread(Tables.documents(spark, dir))
@@ -1304,11 +1272,7 @@ object LakeView {
       else try spark.read.parquet(p).count()
       catch { case _: org.apache.spark.sql.AnalysisException => 0L }
     }
-    val cursor = {
-      val p = Similarity.resolveArtifact(spark, viewDir, "cursor")
-      if (!graft.sources.Formats.pathExists(spark, p)) Long.MinValue
-      else spark.read.parquet(p).agg(max($"last_version")).as[Long].head()
-    }
+    val cursor = LakeCursor.read(spark, viewDir, "cursor")
     val (_, foldedTo) = baseAndWatermark(spark, viewDir)
     Seq(("cursor", cursor), ("folded_to", foldedTo),
       ("base_groups", rowsIn("base")),

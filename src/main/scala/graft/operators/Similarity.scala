@@ -1645,22 +1645,26 @@ object Similarity {
       }
   }
 
-  /** The replay-safe read of the appended delta lists: byte-identical
-    * replay copies collapse on the full (vec_id, epoch) key, then the
-    * LATEST epoch wins per vec_id — a deterministic upsert (within one
-    * epoch a key appears once: the ingest contract of any keyed sink).
-    * Epoch-less stores (a pre-epoch layout, or a side table written by a
-    * batch backfill) keep the plain key dedup — safe only under the
-    * append-only/byte-identical-replay contract. */
-  def readIndexDelta(spark: SparkSession, storeDir: String): DataFrame = {
-    import spark.implicits._
+  /** The replay-safe read of the appended delta lists
+    * ([[readEpochDelta]] on vec_id). */
+  def readIndexDelta(spark: SparkSession, storeDir: String): DataFrame =
+    readEpochDelta(spark, storeDir, "vec_id")
+
+  /** The replay-safe read of an epoch-stamped append store: the LATEST
+    * epoch wins per `key` ([[Ingest.latestPerKey]]) — a deterministic
+    * upsert (within one epoch a key appears once: the ingest contract of
+    * any keyed sink), and byte-identical replay copies of that epoch
+    * collapse in the same rank, with no separate dedup shuffle. Resolves
+    * an interrupted coalesce swap first. Epoch-less stores (a pre-epoch
+    * layout, or a side table written by a batch backfill) keep the plain
+    * key dedup — safe only under the append-only/byte-identical-replay
+    * contract. */
+  private[graft] def readEpochDelta(spark: SparkSession, storeDir: String,
+      key: String): DataFrame = {
     val raw = spark.read.parquet(appendTarget(spark, storeDir))
     if (raw.columns.contains("epoch"))
-      raw.dropDuplicates("vec_id", "epoch")
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy($"vec_id").orderBy($"epoch".desc)))
-        .filter($"_rn" === 1).drop("_rn", "epoch")
-    else raw.dropDuplicates("vec_id")
+      Ingest.latestPerKey(raw, key, col("epoch")).drop("epoch")
+    else raw.dropDuplicates(key)
   }
 
   /** Persist the built IVFADC index — inverted lists + both quantizers —
@@ -1873,15 +1877,9 @@ object Similarity {
   }
 
   /** The replay-safe read of an appended raw-vector lake partition
-    * ((vec_id, embedding, epoch) rows; [[readIndexDelta]] semantics). */
-  def readVecsDelta(spark: SparkSession, vecsDir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.parquet(appendTarget(spark, vecsDir))
-      .dropDuplicates("vec_id", "epoch")
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy($"vec_id").orderBy($"epoch".desc)))
-      .filter($"_rn" === 1).drop("_rn", "epoch")
-  }
+    * ((vec_id, embedding, epoch) rows; [[readEpochDelta]] on vec_id). */
+  def readVecsDelta(spark: SparkSession, vecsDir: String): DataFrame =
+    readEpochDelta(spark, vecsDir, "vec_id")
 
   /** Mean-recall MARGIN under the shipped baseline past which
     * [[retrainAdvised]] trips. The advisory is relative, not an absolute
