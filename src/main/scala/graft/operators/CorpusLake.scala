@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.functions.Text.tokens
 import graft.sources.Tables
-import graft.storage.LakeCursor
+import graft.storage.{Artifact, LakeCursor}
 
 /** The versioned training-corpus lake: admission-gated ingest with a
   * manifest-last commit protocol and manifest-pinned time travel.
@@ -50,7 +50,7 @@ import graft.storage.LakeCursor
   * appends are always safe to read beside. The maintenance REWRITES
   * (incremental pack truncation, deep OPTIMIZE, vacuum) end in a
   * delete→rename swap: a reader that PLANS after the swap is correct by
-  * `resolveArtifact`, but a cross-session scan in flight across the swap
+  * [[Artifact.resolve]], but a cross-session scan in flight across the swap
   * instant can hit vanished files and must retry — the standard
   * swap-rewrite trade. Serving stacks that cannot tolerate a retry use
   * the store-GENERATION layout instead ([[optimizeCorpusVersioned]] —
@@ -147,18 +147,16 @@ object CorpusLake {
     * file-count-proportional, which the OPTIMIZE passes bound. */
   private[graft] def readStore(spark: SparkSession, corpusDir: String,
       name: String): Option[DataFrame] = {
-    val p = Similarity.resolveArtifact(spark, corpusDir,
-      storeName(spark, corpusDir, name))
-    if (!graft.sources.Formats.pathExists(spark, p)) None
     // listing-signature memo (same contract as the manifest read above):
     // the mergeSchema footer union is a 32-task Spark job per call and a
     // snapshot serve opens the docs store at least twice; any append or
     // rewrite under the store dir changes the signature and re-reads
-    else Some(graft.sources.Caches.bySignature[DataFrame](spark,
+    Artifact.find(spark, corpusDir, storeName(spark, corpusDir, name))
+      .map(p => graft.sources.Caches.bySignature[DataFrame](spark,
         s"store_df|$name", p) {
-      spark.read.option("mergeSchema", "true")
-        .option("recursiveFileLookup", "true").parquet(p)
-    })
+        spark.read.option("mergeSchema", "true")
+          .option("recursiveFileLookup", "true").parquet(p)
+      })
   }
 
   // ------------- store generations (pinned-path serving for no-retry readers)
@@ -172,26 +170,23 @@ object CorpusLake {
     * that planned against them finishes without a retry — old
     * generations are reclaimed explicitly ([[reclaimStoreGenerations]])
     * once in-flight readers have drained. No pointer → the legacy
-    * in-place layout (`<name>` + `_compacting` swaps), unchanged. The
-    * pointer itself is one KB-scale parquet row per store, swapped via
-    * the `_compacting` protocol every reader resolves. */
+    * in-place layout (`<name>` + [[Artifact.publish]] swaps), unchanged.
+    * The pointer itself is one KB-scale parquet row per store, published
+    * through the same [[Artifact]] protocol every reader resolves. */
   private[graft] def storeName(spark: SparkSession, corpusDir: String,
       name: String): String = {
-    val p = Similarity.resolveArtifact(spark, corpusDir, "store_head")
-    if (!graft.sources.Formats.pathExists(spark, p)) name
-    else {
-      import spark.implicits._
-      // listing-signature memo: every store/manifest read resolves the
-      // pointer first — without the memo that is one Spark job per
-      // resolve on a one-row artifact (guide §5); a flip rewrites the
-      // artifact dir, so the signature invalidates exactly then
+    import spark.implicits._
+    // listing-signature memo: every store/manifest read resolves the
+    // pointer first — without the memo that is one Spark job per
+    // resolve on a one-row artifact (guide §5); a flip rewrites the
+    // artifact dir, so the signature invalidates exactly then
+    Artifact.find(spark, corpusDir, "store_head").fold(name)(p =>
       graft.sources.Caches.bySignature[String](spark,
           s"store_head|$name", p) {
         spark.read.parquet(p).filter(col("store") === name)
           .agg(max(col("gen"))).as[Option[Long]].head()
           .fold(name)(g => s"${name}_gen_$g")
-      }
-    }
+      })
   }
 
   private def storeGen(spark: SparkSession, corpusDir: String,
@@ -220,25 +215,23 @@ object CorpusLake {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
     var (before, after) = (0L, 0L)
     val flipped = Seq.newBuilder[(String, Long)]
-    for (name <- Seq("docs", "decisions")) {
-      val cur = storeName(spark, corpusDir, name)
-      val p = Similarity.resolveArtifact(spark, corpusDir, cur)
-      if (graft.sources.Formats.pathExists(spark, p)) {
-        val nextGen = storeGen(spark, corpusDir, name) + 1
-        before += dataFileCount(spark, p)
-        val raw0 = spark.read.option("mergeSchema", "true")
-          .option("recursiveFileLookup", "true").parquet(p)
-        val rows = raw0.dropDuplicates(replayKey(raw0))
-        val n = rows.count()
-        val nFiles = math.max(1L,
-          (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-        rows.repartitionByRange(nFiles, col("epoch"), col("doc_id"))
-          .sortWithinPartitions(col("epoch"), col("doc_id"))
-          .write.mode("overwrite")
-          .parquet(s"$corpusDir/${name}_gen_$nextGen")
-        after += dataFileCount(spark, s"$corpusDir/${name}_gen_$nextGen")
-        flipped += name -> nextGen
-      }
+    for (name <- Seq("docs", "decisions");
+         p <- Artifact.find(spark, corpusDir,
+           storeName(spark, corpusDir, name))) {
+      val nextGen = storeGen(spark, corpusDir, name) + 1
+      before += dataFileCount(spark, p)
+      val raw0 = spark.read.option("mergeSchema", "true")
+        .option("recursiveFileLookup", "true").parquet(p)
+      val rows = raw0.dropDuplicates(replayKey(raw0))
+      val n = rows.count()
+      val nFiles = math.max(1L,
+        (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
+      rows.repartitionByRange(nFiles, col("epoch"), col("doc_id"))
+        .sortWithinPartitions(col("epoch"), col("doc_id"))
+        .write.mode("overwrite")
+        .parquet(s"$corpusDir/${name}_gen_$nextGen")
+      after += dataFileCount(spark, s"$corpusDir/${name}_gen_$nextGen")
+      flipped += name -> nextGen
     }
     flipStoreHead(spark, corpusDir, flipped.result())
     (before, after)
@@ -246,7 +239,7 @@ object CorpusLake {
 
   /** Flip the `store_head` pointer to the given (store, gen) entries,
     * carrying forward current entries for stores not flipped this pass.
-    * One KB-scale write through the `_compacting` swap. */
+    * One KB-scale [[Artifact.publish]]. */
   private def flipStoreHead(spark: SparkSession, corpusDir: String,
       flipped: Seq[(String, Long)]): Unit = {
     import spark.implicits._
@@ -260,24 +253,20 @@ object CorpusLake {
     // without the column re-stamps them `now` — conservative, it only
     // delays their reclaim by one drain window.
     val now = System.currentTimeMillis()
-    val prevAt: Map[String, Long] = {
-      val p = Similarity.resolveArtifact(spark, corpusDir, "store_head")
-      if (!graft.sources.Formats.pathExists(spark, p)) Map.empty
-      else {
+    val prevAt: Map[String, Long] =
+      Artifact.find(spark, corpusDir, "store_head").fold(
+          Map.empty[String, Long]) { p =>
         val df = spark.read.parquet(p)
         if (!df.columns.contains("flipped_at")) Map.empty
         else df.select(col("store"), col("flipped_at"))
           .as[(String, Long)].collect().toMap
       }
-    }
-    Seq("docs", "decisions", "manifest")
+    Artifact.publish(Seq("docs", "decisions", "manifest")
       .map(n => (n, cur.getOrElse(n, storeGen(spark, corpusDir, n)),
         if (cur.contains(n)) now else prevAt.getOrElse(n, now)))
       .filter(_._2 > 0)
       .toDF("store", "gen", "flipped_at")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$corpusDir/store_head_compacting")
-    Similarity.swapArtifact(spark, corpusDir, "store_head")
+      .coalesce(1), corpusDir, "store_head")
   }
 
   /** Reclaim superseded store generations: delete every `<name>_gen_<k>`
@@ -299,10 +288,9 @@ object CorpusLake {
     val root = new org.apache.hadoop.fs.Path(corpusDir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val now = System.currentTimeMillis()
-    lazy val flipAt: Map[String, Long] = {
-      val p = Similarity.resolveArtifact(spark, corpusDir, "store_head")
-      if (!graft.sources.Formats.pathExists(spark, p)) Map.empty
-      else {
+    lazy val flipAt: Map[String, Long] =
+      Artifact.find(spark, corpusDir, "store_head").fold(
+          Map.empty[String, Long]) { p =>
         val df = spark.read.parquet(p)
         if (df.columns.contains("flipped_at"))
           df.select(col("store"), col("flipped_at"))
@@ -318,7 +306,6 @@ object CorpusLake {
           Seq("docs", "decisions", "manifest").map(_ -> newest).toMap
         }
       }
-    }
     def oldEnough(store: String, p: org.apache.hadoop.fs.Path): Boolean =
       minAgeMs <= 0L || {
         val it = fs.listFiles(p, true)
@@ -406,12 +393,11 @@ object CorpusLake {
 
   private def localManifest(spark: SparkSession,
       corpusDir: String): DataFrame = {
-    val p = manifestTarget(spark, corpusDir)
-    if (!graft.sources.Formats.pathExists(spark, p))
+    val p = manifestDir(spark, corpusDir).getOrElse(
       return spark.range(0).select(col("id").as("version"),
         lit(0L).as("n_arrived"), lit(0L).as("n_admitted"),
         lit(0L).as("n_duplicate"), lit(0L).as("n_contaminated"),
-        lit(0L).as("n_low_quality")).limit(0)
+        lit(0L).as("n_low_quality")).limit(0))
     // listing-signature memo of the ANALYZED read (plan + inferred
     // schema): a mergeSchema read runs a footer-union Spark job per call,
     // and a serve resolves the manifest several times (committed filter,
@@ -428,8 +414,13 @@ object CorpusLake {
     * readers and the commit writers agree on where the history lives
     * after a [[compactManifest]] flip. */
   private def manifestTarget(spark: SparkSession, corpusDir: String): String =
-    Similarity.resolveArtifact(spark, corpusDir,
+    Artifact.resolve(spark, corpusDir,
       storeName(spark, corpusDir, "manifest"))
+
+  /** [[manifestTarget]] when the lake has committed anything, else None. */
+  private def manifestDir(spark: SparkSession,
+      corpusDir: String): Option[String] =
+    Artifact.find(spark, corpusDir, storeName(spark, corpusDir, "manifest"))
 
   /** Compact the manifest's one-file-per-commit history — the Delta-
     * checkpoint analogue. Every commit appends ONE small parquet file, so
@@ -453,8 +444,7 @@ object CorpusLake {
   def compactManifest(spark: SparkSession, corpusDir: String,
       targetRowsPerFile: Long = 1L << 20): (Long, Long) = {
     require(targetRowsPerFile > 0, "targetRowsPerFile must be positive")
-    val p = manifestTarget(spark, corpusDir)
-    if (!graft.sources.Formats.pathExists(spark, p)) return (0L, 0L)
+    val p = manifestDir(spark, corpusDir).getOrElse(return (0L, 0L))
     val before = dataFileCount(spark, p)
     val nextGen = storeGen(spark, corpusDir, "manifest") + 1
     val rows = spark.read.option("mergeSchema", "true").parquet(p)
@@ -780,9 +770,9 @@ object CorpusLake {
     * data-skipping statistics the lake's point/range reads prune with:
     * one row per data file carrying (row count, min/max doc_id, min/max
     * epoch). ONE column-pruned scan (two long columns + the virtual
-    * `input_file_name`, never text) aggregated per file, written through
-    * the `_compacting` swap as a file-count-sized artifact. Run it where
-    * the OPTIMIZE passes run — after a pack, when files are range-laid
+    * `input_file_name`, never text) aggregated per file, published
+    * through [[Artifact.publish]] as a file-count-sized artifact. Run it
+    * where the OPTIMIZE passes run — after a pack, when files are range-laid
     * by (epoch, doc_id), the zones are tight and a doc_id range touches
     * O(range/target-file-rows) files. Staleness is SAFE by construction:
     * [[prunedDocsFiles]] includes any live file with no stats row
@@ -790,11 +780,7 @@ object CorpusLake {
     * simply match nothing — pruning degrades toward the full listing,
     * never past correctness. Returns the number of files profiled. */
   def collectFileStats(spark: SparkSession, corpusDir: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(corpusDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(s"$corpusDir/file_stats"), true)
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$corpusDir/file_stats_compacting"), true)
+    Artifact.drop(spark, corpusDir, "file_stats")
     collectFileStatsIncremental(spark, corpusDir)._2
   }
 
@@ -814,19 +800,19 @@ object CorpusLake {
     import spark.implicits._
     val live = docsDataFiles(spark, corpusDir)
     val liveSet = live.toSet
-    val sp = Similarity.resolveArtifact(spark, corpusDir, "file_stats")
+    // listing-signature memo: the stats artifact is re-collected on
+    // every freshness check; it only changes when this pass rewrites it
     val oldRows: Seq[(String, Long, Long, Long, Long, Long)] =
-      if (!graft.sources.Formats.pathExists(spark, sp)) Nil
-      // listing-signature memo: the stats artifact is re-collected on
-      // every freshness check; it only changes when this pass rewrites it
-      else graft.sources.Caches.bySignature[
-          Seq[(String, Long, Long, Long, Long, Long)]](
-          spark, "file_stats", sp) {
-        spark.read.parquet(sp)
-          .select($"file", $"n_rows", $"min_doc_id", $"max_doc_id",
-            $"min_epoch", $"max_epoch")
-          .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
-      }
+      Artifact.find(spark, corpusDir, "file_stats").fold(
+          Seq.empty[(String, Long, Long, Long, Long, Long)])(sp =>
+        graft.sources.Caches.bySignature[
+            Seq[(String, Long, Long, Long, Long, Long)]](
+            spark, "file_stats", sp) {
+          spark.read.parquet(sp)
+            .select($"file", $"n_rows", $"min_doc_id", $"max_doc_id",
+              $"min_epoch", $"max_epoch")
+            .as[(String, Long, Long, Long, Long, Long)].collect().toSeq
+        })
     val keep = oldRows.filter(r => liveSet(normPath(r._1)))
     val known = keep.map(r => normPath(r._1)).toSet
     val fresh = live.filterNot(known)
@@ -848,12 +834,10 @@ object CorpusLake {
     val covered = dataRows.map(r => normPath(r._1)).toSet
     val emptyRows = fresh.filterNot(covered).map(f =>
       (f, 0L, Long.MaxValue, Long.MinValue, Long.MaxValue, Long.MinValue))
-    (keep ++ dataRows ++ emptyRows)
+    Artifact.publish((keep ++ dataRows ++ emptyRows)
       .toDF("file", "n_rows", "min_doc_id", "max_doc_id",
         "min_epoch", "max_epoch")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$corpusDir/file_stats_compacting")
-    Similarity.swapArtifact(spark, corpusDir, "file_stats")
+      .coalesce(1), corpusDir, "file_stats")
     (fresh.size.toLong, live.size.toLong)
   }
 
@@ -872,9 +856,8 @@ object CorpusLake {
     * scan planning it replaces. */
   private def docsDataFiles(spark: SparkSession,
       corpusDir: String): Seq[String] = {
-    val p = Similarity.resolveArtifact(spark, corpusDir,
-      storeName(spark, corpusDir, "docs"))
-    if (!graft.sources.Formats.pathExists(spark, p)) return Nil
+    val p = Artifact.find(spark, corpusDir,
+      storeName(spark, corpusDir, "docs")).getOrElse(return Nil)
     val root = new org.apache.hadoop.fs.Path(p)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     def hidden(n: String) = n.startsWith("_") || n.startsWith(".")
@@ -903,9 +886,8 @@ object CorpusLake {
       version: Option[Long]): (Seq[String], Long) = {
     import spark.implicits._
     val live = docsDataFiles(spark, corpusDir)
-    val sp = Similarity.resolveArtifact(spark, corpusDir, "file_stats")
-    if (!graft.sources.Formats.pathExists(spark, sp))
-      return (live, live.size.toLong)
+    val sp = Artifact.find(spark, corpusDir, "file_stats").getOrElse(
+      return (live, live.size.toLong))
     val zones = spark.read.parquet(sp)
       .select($"file", $"min_doc_id", $"max_doc_id", $"min_epoch")
       .as[(String, Long, Long, Long)].collect()
@@ -1048,21 +1030,18 @@ object CorpusLake {
     * (parent dir, base version, branch name). One KB-scale artifact. */
   private[graft] def parentOf(spark: SparkSession,
       corpusDir: String): Option[(String, Long, String)] = {
-    val p = Similarity.resolveArtifact(spark, corpusDir, "branch_parent")
-    if (!graft.sources.Formats.pathExists(spark, p)) None
-    else {
-      import spark.implicits._
-      // listing-signature memo: the pointer is KB-scale and read on every
-      // overlay resolve (twice per branch serve) — the parquet read + head
-      // are two driver round-trip Spark jobs each time (guide §5); any
-      // on-disk change to the artifact re-reads it
+    import spark.implicits._
+    // listing-signature memo: the pointer is KB-scale and read on every
+    // overlay resolve (twice per branch serve) — the parquet read + head
+    // are two driver round-trip Spark jobs each time (guide §5); any
+    // on-disk change to the artifact re-reads it
+    Artifact.find(spark, corpusDir, "branch_parent").map(p =>
       graft.sources.Caches.bySignature[(String, Long, String)](
         spark, "branch_parent", p) {
         spark.read.parquet(p)
           .select(col("parent"), col("base_version"), col("name"))
           .as[(String, Long, String)].head()
-      } match { case t => Some(t) }
-    }
+      })
   }
 
   /** Create a zero-copy branch of the lake — the shallow-clone /
@@ -1151,9 +1130,7 @@ object CorpusLake {
     * replication) — the refusal message says so. */
   private def requireNotFollower(spark: SparkSession, corpusDir: String,
       op: String): Unit = {
-    val cPath = Similarity.resolveArtifact(spark, corpusDir,
-      "replica_cursor")
-    require(!graft.sources.Formats.pathExists(spark, cPath),
+    require(Artifact.find(spark, corpusDir, "replica_cursor").isEmpty,
       s"$op refused: $corpusDir is a replication FOLLOWER " +
         "(replica_cursor present). Local writes would be LWW-stomped by " +
         "the next replicateLake window — write to the primary instead, " +
@@ -1195,8 +1172,8 @@ object CorpusLake {
             local.filter(!col("_deleted"))
               .select(col("doc_id"), col("text"))))
           .withColumn("epoch", lit(v))
-          .write.mode("append").parquet(
-            Similarity.appendTarget(spark, s"$m/buckets"))
+          .write.mode("append")
+          .parquet(Artifact.resolve(spark, s"$m/buckets"))
       }
       recheck()
       // batch_id = -1: outside the stream's id space, same as deleteDocs
@@ -1293,9 +1270,8 @@ object CorpusLake {
 
   /** The full per-doc admission audit log (committed epochs only). */
   def admissionLog(spark: SparkSession, corpusDir: String): DataFrame = {
-    val p = Similarity.resolveArtifact(spark, corpusDir,
-      storeName(spark, corpusDir, "decisions"))
-    if (!graft.sources.Formats.pathExists(spark, p))
+    if (Artifact.find(spark, corpusDir,
+        storeName(spark, corpusDir, "decisions")).isEmpty)
       // full Curate.admitRows schema — the empty and non-empty paths of a
       // reader must agree on columns
       return spark.range(0).select(col("id").as("doc_id"),
@@ -1503,8 +1479,7 @@ object CorpusLake {
             (col("doc_id") +: col("text") +: carryCols.map(col)): _*)
           if (carryCols.nonEmpty) validateCarrySchema(spark, corpusDir, rows)
           val store = s"$maintDir/buckets"
-          val haveStore = graft.sources.Formats.pathExists(
-            spark, Similarity.resolveArtifact(spark, maintDir, "buckets"))
+          val haveStore = Artifact.find(spark, store).isDefined
           // the committed frame is built BEFORE this epoch's writes: the
           // index side must see exactly the previously-committed lake
           val man = manifest(spark, corpusDir)
@@ -1549,8 +1524,8 @@ object CorpusLake {
           val newBuckets = Dedup.bucketRows(Dedup.signRows(admitted))
             .withColumn("epoch", lit(epoch))
           val n = newBuckets.count()
-          newBuckets.write.mode("append").parquet(
-            Similarity.appendTarget(spark, store))
+          newBuckets.write.mode("append")
+            .parquet(Artifact.resolve(spark, store))
           // the manifest row commits the epoch — LAST, after every data
           // write, and only if this writer STILL holds the lease (a batch
           // that outran the TTL aborts here instead of double-assigning)
@@ -1576,9 +1551,9 @@ object CorpusLake {
             .write.mode("append").parquet(manifestTarget(spark, corpusDir))
           // index upkeep (the maintainDedupIndexStream counters, verbatim)
           if (baseCount < 0) baseCount = spark.read.parquet(
-            Similarity.resolveArtifact(spark, indexDir, "buckets")).count()
+            Artifact.resolve(spark, indexDir, "buckets")).count()
           if (deltaCount < 0) deltaCount = spark.read.parquet(
-            Similarity.resolveArtifact(spark, maintDir, "buckets")).count()
+            Artifact.resolve(spark, store)).count()
           else deltaCount += n
           if (deltaCount > 0 && deltaCount >= compactAt * baseCount) {
             // fold ONLY committed epochs (this epoch's manifest row just
@@ -1845,8 +1820,8 @@ object CorpusLake {
           lit(null).cast("string").as("tok"),
           lit(null).cast("long").as("tf"), $"version".as("epoch"))
       upserts.unionByName(tombstones)
-        .write.mode("append").parquet(
-          Similarity.appendTarget(spark, s"$maintDir/seg"))
+        .write.mode("append")
+        .parquet(Artifact.resolve(spark, s"$maintDir/seg"))
     }
 
   /** Lake-commit-driven DENSE index refresh — [[refreshPostingsFromLake]]'s
@@ -1903,8 +1878,8 @@ object CorpusLake {
             .map(f => lit(null).cast(f.dataType).as(f.name)) :+
           col("version").as("epoch"): _*)
       upserts.unionByName(tombstones)
-        .write.mode("append").parquet(
-          Similarity.appendTarget(spark, s"$maintDir/lists"))
+        .write.mode("append")
+        .parquet(Artifact.resolve(spark, s"$maintDir/lists"))
     }
 
   // ------------- incrementally-maintained materialized profile
@@ -2027,8 +2002,7 @@ object CorpusLake {
       val floor = retentionFloor(spark, corpusDir)
       require(from >= floor ||
           (from == Long.MinValue &&
-            !graft.sources.Formats.pathExists(spark,
-              Similarity.resolveArtifact(spark, profDir, "delta"))),
+            Artifact.find(spark, profDir, "delta").isEmpty),
         s"profile cursor $from predates the retention floor $floor: the " +
           "history this window's retractions need was vacuumed — rebuild " +
           "the view (initProfile + fresh refresh) instead")
@@ -2037,8 +2011,8 @@ object CorpusLake {
       // promote the surviving `delta_compacting` FIRST, or this append
       // would create a fresh main dir that strands it forever
       windowDeltas(spark, dir, corpusDir, from, h)
-        .write.mode("append").parquet(
-          Similarity.resolveArtifact(spark, profDir, "delta"))
+        .write.mode("append")
+        .parquet(Artifact.resolve(spark, profDir, "delta"))
     }
 
   /** Serve the maintained profile: base + deduped signed deltas ABOVE the
@@ -2051,21 +2025,18 @@ object CorpusLake {
     * crash between the base swap and the delta truncate cannot double-
     * count. */
   def profile(spark: SparkSession, profDir: String): DataFrame = {
-    val base = spark.read.parquet(
-      Similarity.resolveArtifact(spark, profDir, "base"))
+    val base = spark.read.parquet(Artifact.resolve(spark, profDir, "base"))
     val (baseRows, foldedTo) =
       if (base.columns.contains("_folded_to")) {
         import spark.implicits._
         (base.drop("_folded_to"),
           base.agg(max(col("_folded_to"))).as[Long].head())
       } else (base, Long.MinValue)
-    val deltaPath = Similarity.resolveArtifact(spark, profDir, "delta")
-    val rows =
-      if (!graft.sources.Formats.pathExists(spark, deltaPath)) baseRows
-      else baseRows.unionByName(
+    val rows = Artifact.find(spark, profDir, "delta").fold(baseRows)(
+      deltaPath => baseRows.unionByName(
         spark.read.parquet(deltaPath)
           .dropDuplicates("band", "version")
-          .filter(col("version") > foldedTo).drop("version"))
+          .filter(col("version") > foldedTo).drop("version")))
     rows.groupBy(col("band"))
       .agg(sum(col("n_docs")).as("n_docs"), sum(col("n_tokens")).as("n_tokens"),
         sum(col("n_chars")).as("n_chars"))
@@ -2079,7 +2050,7 @@ object CorpusLake {
     * An additive store cannot rely on keyed idempotency the way the index
     * compactors do (re-adding a folded delta WOULD double-count), so the
     * ordering carries a watermark instead: the merged base lands with
-    * `_folded_to` = the highest folded version via the `_compacting` swap
+    * `_folded_to` = the highest folded version via [[Artifact.publish]]
     * FIRST, and only then does the delta truncate — at every crash point
     * [[profile]] serves each version's delta exactly once (from the delta
     * below the swap, from the base above it). Serving before ≡ after.
@@ -2090,18 +2061,14 @@ object CorpusLake {
     * cadence, as [[maintainCorpusStream]] does). */
   def compactProfile(spark: SparkSession, profDir: String): Unit = {
     import spark.implicits._
-    val deltaPath = Similarity.resolveArtifact(spark, profDir, "delta")
-    if (!graft.sources.Formats.pathExists(spark, deltaPath)) return
+    val deltaPath = Artifact.find(spark, profDir, "delta").getOrElse(return)
     val head = spark.read.parquet(deltaPath)
       .agg(max(col("version"))).as[Option[Long]].head()
     head.foreach { h =>
-      profile(spark, profDir)
-        .withColumn("_folded_to", lit(h))
-        .write.mode("overwrite").parquet(s"$profDir/base_compacting")
-      Similarity.swapArtifact(spark, profDir, "base")
-      spark.read.parquet(deltaPath).filter(col("version") > h)
-        .write.mode("overwrite").parquet(s"$profDir/delta_compacting")
-      Similarity.swapArtifact(spark, profDir, "delta")
+      Artifact.publish(profile(spark, profDir)
+        .withColumn("_folded_to", lit(h)), profDir, "base")
+      Artifact.publish(spark.read.parquet(deltaPath)
+        .filter(col("version") > h), profDir, "delta")
     }
   }
 
@@ -2224,16 +2191,13 @@ object CorpusLake {
   /** The lake's retention floor: the lowest version [[readCorpusAt]] may
     * still pin ([[Long.MinValue]] when no vacuum has run). */
   def retentionFloor(spark: SparkSession, corpusDir: String): Long = {
-    val p = Similarity.resolveArtifact(spark, corpusDir, "retention")
-    if (!graft.sources.Formats.pathExists(spark, p)) Long.MinValue
-    else {
-      import spark.implicits._
-      // listing-signature memo: the floor gates every pinned read; the
-      // artifact only changes at a vacuum (which rewrites the dir)
+    import spark.implicits._
+    // listing-signature memo: the floor gates every pinned read; the
+    // artifact only changes at a vacuum (which rewrites the dir)
+    Artifact.find(spark, corpusDir, "retention").fold(Long.MinValue)(p =>
       graft.sources.Caches.bySignature[Long](spark, "retention_floor", p) {
         spark.read.parquet(p).agg(max($"min_version")).as[Long].head()
-      }
-    }
+      })
   }
 
   // ------------- run pinning (reproducible training corpora)
@@ -2855,8 +2819,8 @@ object CorpusLake {
     * while the data is still intact — never the reverse, where a pinned
     * read between the floor and the old horizon would silently serve
     * collapsed history. The docs/decisions rewrites then go through the
-    * same `_compacting`-swap protocol as index compaction, recovered by
-    * [[Similarity.resolveArtifact]] on every read path. Floors only move
+    * same [[Artifact.publish]] swap as index compaction, recovered by
+    * [[Artifact.resolve]] on every read path. Floors only move
     * up (enforced), for the same reason.
     *
     * With `versioned = true` the kept rows land in a NEW store
@@ -2900,9 +2864,8 @@ object CorpusLake {
       s"vacuum to $retainFrom would invalidate pinned run(s) " +
         pinnedBelow.map { case (t, v) => s"$t@$v" }.mkString(", ") +
         " — unpin them first")
-    Seq(retainFrom).toDF("min_version")
-      .write.mode("overwrite").parquet(s"$corpusDir/retention_compacting")
-    Similarity.swapArtifact(spark, corpusDir, "retention")
+    Artifact.publish(Seq(retainFrom).toDF("min_version"), corpusDir,
+      "retention")
     val manDf = manifest(spark, corpusDir)
     val head = {
       import spark.implicits._
@@ -2938,8 +2901,7 @@ object CorpusLake {
     def rewrite(name: String, rows: DataFrame): String =
       if (!versioned) {
         val cur = storeName(spark, corpusDir, name)
-        rows.write.mode("overwrite").parquet(s"$corpusDir/${cur}_compacting")
-        Similarity.swapArtifact(spark, corpusDir, cur)
+        Artifact.publish(rows, corpusDir, cur)
         s"$corpusDir/$cur"
       } else {
         val g = storeGen(spark, corpusDir, name) + 1
@@ -2949,9 +2911,8 @@ object CorpusLake {
       }
     val kept = recent.unionByName(floorState).unionByName(inFlight)
     val newDocs = rewrite("docs", kept)
-    val decStore = storeName(spark, corpusDir, "decisions")
-    val decPath = Similarity.resolveArtifact(spark, corpusDir, decStore)
-    if (graft.sources.Formats.pathExists(spark, decPath)) {
+    if (Artifact.find(spark, corpusDir,
+        storeName(spark, corpusDir, "decisions")).isDefined) {
       val dec0 = readStore(spark, corpusDir, "decisions").get
       val dec = dec0.dropDuplicates(replayKey(dec0))
       rewrite("decisions", committedRows(dec, manDf, keepTag = true)
@@ -3013,7 +2974,7 @@ object CorpusLake {
     val head = man.agg(max(col("version"))).as[Option[Long]].head()
     def store(name: String): (Long, Long) = readStore(spark, corpusDir, name)
       .fold((0L, 0L))(df => (df.count(),
-        dataFileCount(spark, Similarity.resolveArtifact(spark, corpusDir,
+        dataFileCount(spark, Artifact.resolve(spark, corpusDir,
           storeName(spark, corpusDir, name)))))
     val (docRows, docFiles) = store("docs")
     val (decRows, decFiles) = store("decisions")
@@ -3059,11 +3020,8 @@ object CorpusLake {
     // the commit-listing backlog: one file per commit until compactManifest
     // rewrites the history — rising against flat committed_epochs after a
     // compaction says the next one is due
-    val manFiles = {
-      val p = manifestTarget(spark, corpusDir)
-      if (!graft.sources.Formats.pathExists(spark, p)) 0L
-      else dataFileCount(spark, p)
-    }
+    val manFiles =
+      manifestDir(spark, corpusDir).fold(0L)(dataFileCount(spark, _))
     val staleGens = {
       val root = new org.apache.hadoop.fs.Path(corpusDir)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -3083,11 +3041,8 @@ object CorpusLake {
     // (profiled vs live files — a gap says a collect is due), branch
     // facts (is this dir a branch; how many live branches hold pins on
     // it), and the replication cursor when this dir is a follower
-    val zoneFiles = {
-      val p = Similarity.resolveArtifact(spark, corpusDir, "file_stats")
-      if (!graft.sources.Formats.pathExists(spark, p)) -1L
-      else spark.read.parquet(p).count()
-    }
+    val zoneFiles = Artifact.find(spark, corpusDir, "file_stats")
+      .fold(-1L)(spark.read.parquet(_).count())
     val branchBase = parentOf(spark, corpusDir).map(_._2)
     val liveBranches = branches(spark, corpusDir).count()
     val replicaCursor = {
@@ -3154,9 +3109,9 @@ object CorpusLake {
     * either. */
   private def liveTarget(spark: SparkSession, corpusDir: String,
       name: String): String = {
-    val store = Similarity.resolveArtifact(spark, corpusDir,
+    val store = Artifact.resolve(spark, corpusDir,
       storeName(spark, corpusDir, name))
-    Similarity.resolveArtifact(spark, store, "live")
+    Artifact.resolve(spark, store, "live")
   }
 
   /** Incremental OPTIMIZE — the O(new data) hygiene pass the inline
@@ -3180,10 +3135,9 @@ object CorpusLake {
     import spark.implicits._
     var (packed, reclaimed) = (0L, 0L)
     for (name <- Seq("docs", "decisions")) {
-      val store = Similarity.resolveArtifact(spark, corpusDir,
+      val store = Artifact.resolve(spark, corpusDir,
         storeName(spark, corpusDir, name))
-      val live = Similarity.resolveArtifact(spark, store, "live")
-      if (graft.sources.Formats.pathExists(spark, live)) {
+      Artifact.find(spark, store, "live").foreach { live =>
         val filesBefore = dataFileCount(spark, live)
         val raw = spark.read.option("mergeSchema", "true").parquet(live)
         val foldedThrough =
@@ -3236,33 +3190,30 @@ object CorpusLake {
     * even after coalescing (the property the per-epoch append layout gave
     * for free, preserved deliberately).
     *
-    * Crash safety: the rewrite lands in `*_compacting` and swaps in
-    * ([[Similarity.swapArtifact]]); every reader and appender resolves an
-    * interrupted swap ([[Similarity.resolveArtifact]] /
-    * `Similarity.appendTarget`). Like vacuum's wholesale rewrite, an
-    * append landing DURING the rewrite window would be lost — run on the
-    * maintenance cadence, between batches (the documented quiescence every
-    * whole-artifact rewrite here assumes).
+    * Crash safety: the rewrite goes through [[Artifact.publish]]; every
+    * reader and appender resolves an interrupted swap
+    * ([[Artifact.resolve]] / [[Artifact.find]]). Like vacuum's wholesale
+    * rewrite, an append landing DURING the rewrite window would be lost —
+    * run on the maintenance cadence, between batches (the documented
+    * quiescence every whole-artifact rewrite here assumes).
     *
     * Returns (data files before, data files after) across both stores. */
   def optimizeCorpus(spark: SparkSession, corpusDir: String,
       targetRowsPerFile: Long = 1L << 20): (Long, Long) = {
     require(targetRowsPerFile > 0, s"targetRowsPerFile must be positive")
     var (before, after) = (0L, 0L)
-    for (name <- Seq("docs", "decisions")) {
-      val cur = storeName(spark, corpusDir, name)
-      val p = Similarity.resolveArtifact(spark, corpusDir, cur)
-      if (graft.sources.Formats.pathExists(spark, p)) {
-        before += dataFileCount(spark, p)
-        // replay-collapse key includes the writer tag when present: the
-        // deep rewrite must not collapse an orphaned zombie row and a
-        // committed row at one (doc_id, epoch) into an arbitrary survivor
-        val keys = readStore(spark, corpusDir, name)
-          .map(replayKey).getOrElse(Seq("doc_id", "epoch"))
-        Similarity.coalesceStore(spark, s"$corpusDir/$cur",
-          keys, Seq("epoch", "doc_id"), targetRowsPerFile)
-        after += dataFileCount(spark, s"$corpusDir/$cur")
-      }
+    for (name <- Seq("docs", "decisions");
+         p <- Artifact.find(spark, corpusDir,
+           storeName(spark, corpusDir, name))) {
+      before += dataFileCount(spark, p)
+      // replay-collapse key includes the writer tag when present: the
+      // deep rewrite must not collapse an orphaned zombie row and a
+      // committed row at one (doc_id, epoch) into an arbitrary survivor
+      val keys = readStore(spark, corpusDir, name)
+        .map(replayKey).getOrElse(Seq("doc_id", "epoch"))
+      Similarity.coalesceStore(spark, p, keys, Seq("epoch", "doc_id"),
+        targetRowsPerFile)
+      after += dataFileCount(spark, p)
     }
     (before, after)
   }

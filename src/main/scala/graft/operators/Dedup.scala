@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.Text._
+import graft.storage.Artifact
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (hash-groupBy), MinHash+LSH, SimHash, and blocked n-gram Jaccard.
@@ -271,8 +272,7 @@ object Dedup {
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         bucketRows(signRows(batch))
           .withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(
-            graft.operators.Similarity.appendTarget(spark, storeDir))
+          .write.mode("append").parquet(Artifact.resolve(spark, storeDir))
       }
   }
 
@@ -302,12 +302,7 @@ object Dedup {
       stores: Seq[(String, Option[Long])],
       committed: Option[DataFrame] = None): DataFrame = {
     val raws = stores.map { case (storeDir, cap) =>
-      val p = {
-        val i = storeDir.lastIndexOf('/')
-        graft.operators.Similarity.resolveArtifact(
-          spark, storeDir.take(i), storeDir.drop(i + 1))
-      }
-      val raw = spark.read.parquet(p)
+      val raw = spark.read.parquet(Artifact.resolve(spark, storeDir))
       cap.fold(raw)(c => raw.filter(col("epoch") <= c))
     }
     val raw0 = raws.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -344,20 +339,18 @@ object Dedup {
     // only rows the fold could have seen may be dropped)
     val foldedThrough = {
       import spark.implicits._
-      spark.read.parquet(graft.operators.Similarity
-          .appendTarget(spark, storeDir))
+      spark.read.parquet(Artifact.resolve(spark, storeDir))
         .agg(max(col("epoch"))).as[Option[Long]].head()
     }
     val delta = readDedupDelta(spark, storeDir, committed)
     if (delta.isEmpty) return
     val base = spark.read.parquet(
-      graft.operators.Similarity.resolveArtifact(spark, indexDir, "buckets"))
+      Artifact.resolve(spark, indexDir, "buckets"))
     val merged = graft.operators.Similarity
       .mergeDeltaRows(base, delta, "doc_id")
-    retract.fold(merged)(ids => merged.join(
-        ids.select(col("doc_id")), Seq("doc_id"), "left_anti"))
-      .write.mode("overwrite").parquet(s"$indexDir/buckets_compacting")
-    graft.operators.Similarity.swapArtifact(spark, indexDir, "buckets")
+    Artifact.publish(retract.fold(merged)(ids => merged.join(
+        ids.select(col("doc_id")), Seq("doc_id"), "left_anti")),
+      indexDir, "buckets")
     committed match {
       case None =>
         // bound by the fold watermark so a row a live appender lands
@@ -367,14 +360,11 @@ object Dedup {
           foldedThrough)
       case Some(c) =>
         // keep the not-yet-committed epochs: rewrite via the same
-        // `_compacting` swap the readers recover (readDedupDelta resolves)
-        val i = storeDir.lastIndexOf('/')
-        val (parent, name) = (storeDir.take(i), storeDir.drop(i + 1))
-        spark.read.parquet(graft.operators.Similarity
-            .resolveArtifact(spark, parent, name))
-          .join(c.select(col("epoch")), Seq("epoch"), "left_anti")
-          .write.mode("overwrite").parquet(s"${storeDir}_compacting")
-        graft.operators.Similarity.swapArtifact(spark, parent, name)
+        // swap the readers recover (readDedupDelta resolves)
+        Artifact.publish(
+          spark.read.parquet(Artifact.resolve(spark, storeDir))
+            .join(c.select(col("epoch")), Seq("epoch"), "left_anti"),
+          storeDir)
     }
   }
 
@@ -400,17 +390,17 @@ object Dedup {
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         val buckets = bucketRows(signRows(batch)).withColumn("epoch", lit(epoch))
         val n = buckets.count()
-        buckets.write.mode("append").parquet(graft.operators.Similarity
-          .appendTarget(spark, s"$maintDir/buckets"))
+        buckets.write.mode("append")
+          .parquet(Artifact.resolve(spark, s"$maintDir/buckets"))
         batch.select(col("doc_id"), col("text"))
           .withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(graft.operators.Similarity
-            .appendTarget(spark, s"$maintDir/docs"))
+          .write.mode("append")
+          .parquet(Artifact.resolve(spark, s"$maintDir/docs"))
         if (baseCount < 0) baseCount = spark.read.parquet(
-          graft.operators.Similarity.resolveArtifact(spark, indexDir, "buckets")).count()
+          Artifact.resolve(spark, indexDir, "buckets")).count()
         if (deltaCount < 0)
-          deltaCount = spark.read.parquet(graft.operators.Similarity
-            .appendTarget(spark, s"$maintDir/buckets")).count()
+          deltaCount = spark.read
+            .parquet(Artifact.resolve(spark, s"$maintDir/buckets")).count()
         else deltaCount += n
         if (deltaCount > 0 && deltaCount >= compactAt * baseCount) {
           compactDedupIndex(spark, indexDir, s"$maintDir/buckets")
@@ -454,16 +444,12 @@ object Dedup {
       committedEpochs: Option[DataFrame] = None,
       sharedStores: Seq[(String, Option[Long])] = Nil): DataFrame = {
     val base = spark.read.parquet(
-      graft.operators.Similarity.resolveArtifact(spark, indexDir, "buckets"))
+      Artifact.resolve(spark, indexDir, "buckets"))
     // an ancestor that never ingested has no bucket store yet — nothing
     // to dedup against there, not an error
     val stores = (storeDir.map(_ -> (None: Option[Long])).toSeq ++
       sharedStores).filter { case (s, _) =>
-        val i = s.lastIndexOf('/')
-        graft.sources.Formats.pathExists(spark,
-          graft.operators.Similarity.resolveArtifact(
-            spark, s.take(i), s.drop(i + 1)))
-      }
+        Artifact.find(spark, s).isDefined }
     val idx =
       if (stores.isEmpty) base
       else graft.operators.Similarity.mergeDeltaRows(base,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
-import graft.storage.LakeCursor
+import graft.storage.{Artifact, LakeCursor}
 
 /** USER-DECLARED incremental materialized views over the corpus lake —
   * the profile view's signed-retraction algebra ([[CorpusLake]]'s
@@ -158,13 +158,14 @@ object LakeView {
       quants: Seq[(String, String, Double)], baseCols: Seq[String] = Nil)
 
   def viewSpecFull(spark: SparkSession, viewDir: String): ViewSpec = {
-    // resolveArtifact recovery: schema evolution rewrites the spec via
-    // the _compacting swap, so a crash mid-swap self-heals on read.
+    // Artifact.find recovery: schema evolution rewrites the spec via
+    // Artifact.publish, so a crash mid-swap self-heals on read.
     // Listing-signature memo: the one-row declaration is read on every
     // serve and refresh — without the memo that is a schema-inference
     // job plus a head() collect per read; an evolution swap rewrites the
     // dir and invalidates the signature.
-    val sPath = Similarity.resolveArtifact(spark, viewDir, "spec")
+    val sPath = Artifact.find(spark, viewDir, "spec").getOrElse(
+      throw new java.io.FileNotFoundException(s"$viewDir holds no view spec"))
     graft.sources.Caches.bySignature[ViewSpec](spark, "view_spec", sPath) {
       viewSpecUncached(spark, sPath)
     }
@@ -419,15 +420,13 @@ object LakeView {
     val baseExt = baseRows
       .select(dimCols ++ extNames.map(col) :+
         lit(Long.MinValue).as("version"): _*)
-    val extPath = Similarity.resolveArtifact(spark, viewDir, "ext")
-    val rows =
-      if (!graft.sources.Formats.pathExists(spark, extPath)) baseExt
-      else baseExt.unionByName(
+    val rows = Artifact.find(spark, viewDir, "ext").fold(baseExt)(
+      extPath => baseExt.unionByName(
         spark.read.parquet(extPath)
           .dropDuplicates(dims.map(_._1) :+ "version")
           .filter(col("version") > foldedTo &&
             upTo.fold(lit(true))(v => col("version") <= v))
-          .select(dimCols ++ extNames.map(col) :+ col("version"): _*))
+          .select(dimCols ++ extNames.map(col) :+ col("version"): _*)))
     rows.groupBy(dimCols: _*)
       .agg(max_by(col(extNames.head), col("version")).as(extNames.head),
         extNames.tail.map(n => max_by(col(n), col("version")).as(n)): _*)
@@ -672,8 +671,7 @@ object LakeView {
       from: Long, floor: Long): Unit =
     require(from >= floor ||
         (from == Long.MinValue &&
-          !graft.sources.Formats.pathExists(spark,
-            Similarity.resolveArtifact(spark, viewDir, "delta"))),
+          Artifact.find(spark, viewDir, "delta").isEmpty),
       s"view cursor $from predates the retention floor $floor: the " +
         "history this window's retractions need was vacuumed — rebuild " +
         "the view instead")
@@ -701,8 +699,7 @@ object LakeView {
     val seq = seq1.filter(col("epoch") > from)
     val tDelta = System.nanoTime()
     windowDeltas(seq, dims, measures, baseCols)
-      .write.mode("append").parquet(
-        Similarity.resolveArtifact(spark, viewDir, "delta"))
+      .write.mode("append").parquet(Artifact.resolve(spark, viewDir, "delta"))
     if (sys.env.contains("SPARK_GRAFT_VIEW_TIMING"))
       System.err.println(s"[viewtiming]   delta leg=" +
         s"${(System.nanoTime() - tDelta) / 1000000}ms view=$viewDir")
@@ -717,8 +714,7 @@ object LakeView {
       windowExtRows(spark, dir, corpusDir, viewDir, seq,
           from, h, baseRows, foldedTo, dims, mins, maxs, dists, quants,
           baseCols, unchangedInputs)
-        .write.mode("append").parquet(
-          Similarity.resolveArtifact(spark, viewDir, "ext"))
+        .write.mode("append").parquet(Artifact.resolve(spark, viewDir, "ext"))
       if (sys.env.contains("SPARK_GRAFT_VIEW_TIMING"))
         System.err.println(s"[viewtiming]   ext leg=" +
           s"${(System.nanoTime() - tExt) / 1000000}ms view=$viewDir")
@@ -767,12 +763,9 @@ object LakeView {
       // store and only until the first fold lands a real watermark.
       val effective =
         if (foldedTo != Long.MinValue) foldedTo
-        else {
-          val dPath = Similarity.resolveArtifact(spark, viewDir, "delta")
-          if (!graft.sources.Formats.pathExists(spark, dPath)) head
-          else spark.read.parquet(dPath).agg(min(col("version")))
-            .as[Option[Long]].head().fold(head)(_ - 1)
-        }
+        else Artifact.find(spark, viewDir, "delta").fold(head)(dPath =>
+          spark.read.parquet(dPath).agg(min(col("version")))
+            .as[Option[Long]].head().fold(head)(_ - 1))
       if (head - effective >= compactEvery) compactView(spark, viewDir)
     }
 
@@ -921,7 +914,8 @@ object LakeView {
   private def baseAndWatermark(spark: SparkSession,
       viewDir: String): (DataFrame, Long) = {
     import spark.implicits._
-    val bPath = Similarity.resolveArtifact(spark, viewDir, "base")
+    val bPath = Artifact.find(spark, viewDir, "base").getOrElse(
+      throw new java.io.FileNotFoundException(s"$viewDir holds no view base"))
     // listing-signature memo: serves and refreshes re-open the base per
     // call (a schema-inference job plus a watermark-max job each time);
     // a compaction swaps the dir and invalidates the signature
@@ -1009,10 +1003,8 @@ object LakeView {
       s"view history at $v was folded into the base (folded through " +
         s"$foldedTo) — compaction collapses per-version deltas; pin a " +
         "version >= the fold watermark"))
-    val deltaPath = Similarity.resolveArtifact(spark, viewDir, "delta")
-    val rows =
-      if (!graft.sources.Formats.pathExists(spark, deltaPath)) baseRows
-      else baseRows.unionByName(
+    val rows = Artifact.find(spark, viewDir, "delta").fold(baseRows)(
+      deltaPath => baseRows.unionByName(
         spark.read.parquet(deltaPath)
           .dropDuplicates(dims.map(_._1) :+ "version")
           .filter(col("version") > foldedTo &&
@@ -1020,7 +1012,7 @@ object LakeView {
           // spec projection, like the base: evolution can leave the
           // stores briefly wider than the declaration
           .select((dimNames :+ "n_docs").map(col) ++
-            measures.map(m => col(m._1)): _*))
+            measures.map(m => col(m._1)): _*)))
     val zeroed = (col("n_docs") === 0) +:
       measures.map(m => col(m._1) === 0)
     val sums = rows.groupBy(dimCols: _*)
@@ -1051,8 +1043,7 @@ object LakeView {
     * maintenance cadence like every rewrite. */
   def compactView(spark: SparkSession, viewDir: String): Unit = {
     import spark.implicits._
-    val deltaPath = Similarity.resolveArtifact(spark, viewDir, "delta")
-    if (!graft.sources.Formats.pathExists(spark, deltaPath)) return
+    val deltaPath = Artifact.find(spark, viewDir, "delta").getOrElse(return)
     val head = spark.read.parquet(deltaPath)
       .agg(max(col("version"))).as[Option[Long]].head()
     head.foreach { h =>
@@ -1060,19 +1051,14 @@ object LakeView {
       // extremes — so the rewritten base carries everything the serve
       // and seed paths keep accumulating from (the derived avg columns
       // are a projection, never folded)
-      foldInternal(spark, viewDir, None, viewSpecFull(spark, viewDir))
-        .withColumn("_folded_to", lit(h))
-        .write.mode("overwrite").parquet(s"$viewDir/base_compacting")
-      Similarity.swapArtifact(spark, viewDir, "base")
-      spark.read.parquet(deltaPath).filter(col("version") > h)
-        .write.mode("overwrite").parquet(s"$viewDir/delta_compacting")
-      Similarity.swapArtifact(spark, viewDir, "delta")
-      val extPath = Similarity.resolveArtifact(spark, viewDir, "ext")
-      if (graft.sources.Formats.pathExists(spark, extPath)) {
-        spark.read.parquet(extPath).filter(col("version") > h)
-          .write.mode("overwrite").parquet(s"$viewDir/ext_compacting")
-        Similarity.swapArtifact(spark, viewDir, "ext")
-      }
+      Artifact.publish(
+        foldInternal(spark, viewDir, None, viewSpecFull(spark, viewDir))
+          .withColumn("_folded_to", lit(h)), viewDir, "base")
+      Artifact.publish(spark.read.parquet(deltaPath)
+        .filter(col("version") > h), viewDir, "delta")
+      Artifact.find(spark, viewDir, "ext").foreach(extPath =>
+        Artifact.publish(spark.read.parquet(extPath)
+          .filter(col("version") > h), viewDir, "ext"))
     }
   }
 
@@ -1151,16 +1137,14 @@ object LakeView {
       .groupBy(dimNames.map(col): _*)
       .agg(newAggs.head, newAggs.tail: _*).alias("bf")
     val base = spark.read.parquet(
-      Similarity.resolveArtifact(spark, viewDir, "base")).alias("b")
-    base.join(backfill,
+      Artifact.resolve(spark, viewDir, "base")).alias("b")
+    Artifact.publish(base.join(backfill,
         dimNames.map(n => col(s"b.$n") <=> col(s"bf.$n")).reduce(_ && _),
         "left")
       .select(col("b.*") +:
         ((newInternal ++ minMeasures ++ maxMeasures ++ distinctMeasures)
           .map(_._1) ++ quantileMeasures.map(_._1))
-          .map(n => col(s"bf.$n").as(n)): _*)
-      .write.mode("overwrite").parquet(s"$viewDir/base_compacting")
-    Similarity.swapArtifact(spark, viewDir, "base")
+          .map(n => col(s"bf.$n").as(n)): _*), viewDir, "base")
     // 3. the new declaration lands LAST
     writeSpec(spark, viewDir, dims, sums0 ++ measures,
       mins0 ++ minMeasures, maxs0 ++ maxMeasures, avgs0 ++ avgMeasures,
@@ -1196,10 +1180,8 @@ object LakeView {
     val physical = aliases.flatMap(a =>
       if (avgs0.exists(_._1 == a)) Seq(s"${a}__sum", s"${a}__cnt")
       else Seq(a))
-    spark.read.parquet(Similarity.resolveArtifact(spark, viewDir, "base"))
-      .drop(physical: _*)
-      .write.mode("overwrite").parquet(s"$viewDir/base_compacting")
-    Similarity.swapArtifact(spark, viewDir, "base")
+    Artifact.publish(spark.read.parquet(Artifact.resolve(spark, viewDir,
+      "base")).drop(physical: _*), viewDir, "base")
   }
 
   /** Fold every consumed delta/ext row into the base, then delete the
@@ -1208,19 +1190,16 @@ object LakeView {
   private def foldAndDrainStores(spark: SparkSession, viewDir: String,
       op: String): Unit = {
     compactView(spark, viewDir)
-    val fs = new org.apache.hadoop.fs.Path(viewDir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
     Seq("delta", "ext").foreach { n =>
-      val p = Similarity.resolveArtifact(spark, viewDir, n)
-      if (graft.sources.Formats.pathExists(spark, p)) {
+      Artifact.find(spark, viewDir, n).foreach { p =>
         require(spark.read.parquet(p).isEmpty,
           s"$op: $n still holds unfolded rows after the fold")
-        fs.delete(new org.apache.hadoop.fs.Path(p), true)
+        Artifact.drop(spark, viewDir, n)
       }
     }
   }
 
-  /** Rewrite the spec through the `_compacting` swap (readers resolve). */
+  /** Rewrite the spec through [[Artifact.publish]] (readers resolve). */
   private def writeSpec(spark: SparkSession, viewDir: String,
       dims: Seq[(String, String)], sums: Seq[(String, String)],
       mins: Seq[(String, String)], maxs: Seq[(String, String)],
@@ -1228,17 +1207,16 @@ object LakeView {
       quants: Seq[(String, String, Double)],
       baseCols: Seq[String]): Unit = {
     import spark.implicits._
-    Seq((dims.map(_._1), dims.map(_._2), sums.map(_._1), sums.map(_._2),
-        mins.map(_._1), mins.map(_._2), maxs.map(_._1), maxs.map(_._2),
-        avgs.map(_._1), avgs.map(_._2), dists.map(_._1), dists.map(_._2),
-        quants.map(_._1), quants.map(_._2), quants.map(_._3), baseCols))
+    Artifact.publish(Seq((dims.map(_._1), dims.map(_._2), sums.map(_._1),
+        sums.map(_._2), mins.map(_._1), mins.map(_._2), maxs.map(_._1),
+        maxs.map(_._2), avgs.map(_._1), avgs.map(_._2), dists.map(_._1),
+        dists.map(_._2), quants.map(_._1), quants.map(_._2),
+        quants.map(_._3), baseCols))
       .toDF("dim_names", "dim_exprs", "measure_names", "measure_exprs",
         "min_names", "min_exprs", "max_names", "max_exprs",
         "avg_names", "avg_exprs", "dist_names", "dist_exprs",
         "q_names", "q_exprs", "q_ps", "base_cols")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$viewDir/spec_compacting")
-    Similarity.swapArtifact(spark, viewDir, "spec")
+      .coalesce(1), viewDir, "spec")
   }
 
   /** DESCRIBE VIEW — the declaration as data: one row per output column
@@ -1266,12 +1244,10 @@ object LakeView {
     * fold). KB-scale reads only. */
   def viewStats(spark: SparkSession, viewDir: String): DataFrame = {
     import spark.implicits._
-    def rowsIn(name: String): Long = {
-      val p = Similarity.resolveArtifact(spark, viewDir, name)
-      if (!graft.sources.Formats.pathExists(spark, p)) 0L
-      else try spark.read.parquet(p).count()
-      catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-    }
+    def rowsIn(name: String): Long =
+      Artifact.find(spark, viewDir, name).fold(0L)(p =>
+        try spark.read.parquet(p).count()
+        catch { case _: org.apache.spark.sql.AnalysisException => 0L })
     val cursor = LakeCursor.read(spark, viewDir, "cursor")
     val (_, foldedTo) = baseAndWatermark(spark, viewDir)
     Seq(("cursor", cursor), ("folded_to", foldedTo),

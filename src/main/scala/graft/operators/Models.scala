@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.storage.Artifact
 
 /** Persistence for the library's SMALL trained-model artifacts — the last
   * piece of the build-once/serve-forever posture. The three INDEXES
@@ -9,9 +10,10 @@ import org.apache.spark.sql.functions._
   * [[Dedup.saveDedupIndex]]); this closes the remaining trained state a
   * serving session needs: BPE merges, linear-probe weights, mixture
   * thresholds, DSIR bucket counts, and the bigram-LM count tables. Every
-  * write goes through the same crash-safe `_compacting` swap and every
-  * read through the same interrupted-swap recovery as the index artifacts,
-  * so a model directory is serve-consistent at every crash point.
+  * table is written by [[Artifact.publish]] and read through
+  * [[Artifact.resolve]], the same crash-safe swap and interrupted-swap
+  * recovery as the index artifacts, so a model directory is
+  * serve-consistent at every crash point.
   *
   * Multi-table artifacts (DSIR, LM) swap per table, not per set — a crash
   * mid-save can mix generations across tables. The convention for a
@@ -28,28 +30,21 @@ import org.apache.spark.sql.functions._
   * full cache drop). */
 object Models {
 
-  /** Crash-safe single-table save: write beside, then swap. */
-  def save(df: DataFrame, modelDir: String, name: String): Unit = {
-    val spark = df.sparkSession
-    df.write.mode("overwrite").parquet(s"$modelDir/${name}_compacting")
-    Similarity.swapArtifact(spark, modelDir, name)
-  }
-
-  /** Load a saved model table, recovering an interrupted swap first. */
-  def load(spark: SparkSession, modelDir: String, name: String): DataFrame =
-    spark.read.parquet(
-      Similarity.resolveArtifact(spark, modelDir, name))
+  /** A saved model table, recovering an interrupted swap first. */
+  private def saved(spark: SparkSession, modelDir: String,
+      name: String): DataFrame =
+    spark.read.parquet(Artifact.resolve(spark, modelDir, name))
 
   // ------------- BPE tokenizer
 
   def saveTokenizer(spark: SparkSession, dir: String,
       modelDir: String): Unit =
-    save(Tokenizer.bpeTrain(spark, dir), modelDir, "bpe_merges")
+    Artifact.publish(Tokenizer.bpeTrain(spark, dir), modelDir, "bpe_merges")
 
   /** The trained merge list in rank order — bounded by
     * [[Tokenizer.BpeMerges]], the driver-literal contract of the encode. */
   def loadMerges(spark: SparkSession, modelDir: String): Seq[(String, String)] =
-    load(spark, modelDir, "bpe_merges")
+    saved(spark, modelDir, "bpe_merges")
       .orderBy(col("rank"))
       .select(col("left_sym"), col("right_sym"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
@@ -61,11 +56,12 @@ object Models {
   // ------------- linear probe (model-based quality gate)
 
   def saveProbe(spark: SparkSession, dir: String, modelDir: String): Unit =
-    save(Similarity.linearProbe(spark, dir), modelDir, "probe_weights")
+    Artifact.publish(Similarity.linearProbe(spark, dir), modelDir,
+      "probe_weights")
 
   def probeScoreFromSaved(spark: SparkSession, modelDir: String,
       vecs: DataFrame): DataFrame = {
-    val w = load(spark, modelDir, "probe_weights")
+    val w = saved(spark, modelDir, "probe_weights")
       .orderBy(col("dim")).select(col("weight"))
       .collect().map(_.getDouble(0)) // 65 doubles — the weight literal
     Similarity.probeScoreStream(vecs, w)
@@ -75,48 +71,48 @@ object Models {
 
   def saveMixturePolicy(spark: SparkSession, dir: String,
       modelDir: String): Unit =
-    save(Sampling.mixtureThresholds(spark, dir), modelDir,
+    Artifact.publish(Sampling.mixtureThresholds(spark, dir), modelDir,
       "mixture_thresholds")
 
   def mixtureRowsFromSaved(spark: SparkSession, modelDir: String,
       rows: DataFrame): DataFrame =
     Sampling.mixtureRows(rows,
-      load(spark, modelDir, "mixture_thresholds"))
+      saved(spark, modelDir, "mixture_thresholds"))
 
   // ------------- DSIR importance-resampling model
 
   def saveDsir(spark: SparkSession, dir: String, modelDir: String): Unit = {
     val (tgt, raw, totals) = Sampling.dsirModel(spark, dir)
-    save(tgt, modelDir, "dsir_target")
-    save(raw, modelDir, "dsir_raw")
-    save(totals, modelDir, "dsir_totals")
+    Artifact.publish(tgt, modelDir, "dsir_target")
+    Artifact.publish(raw, modelDir, "dsir_raw")
+    Artifact.publish(totals, modelDir, "dsir_totals")
   }
 
   def dsirScoreFromSaved(spark: SparkSession, modelDir: String,
       rows: DataFrame): DataFrame =
     Sampling.dsirScoreRows(rows,
-      load(spark, modelDir, "dsir_target"),
-      load(spark, modelDir, "dsir_raw"),
-      load(spark, modelDir, "dsir_totals"))
+      saved(spark, modelDir, "dsir_target"),
+      saved(spark, modelDir, "dsir_raw"),
+      saved(spark, modelDir, "dsir_totals"))
 
   // ------------- bigram-LM quality gate
 
   def saveLm(spark: SparkSession, dir: String, modelDir: String): Unit = {
     import spark.implicits._
     val (bgc, uni, vocab) = TextAnalysis.lmModel(spark, dir)
-    save(bgc, modelDir, "lm_bigrams")
-    save(uni, modelDir, "lm_unigrams")
-    save(Seq(vocab).toDF("v"), modelDir, "lm_vocab")
+    Artifact.publish(bgc, modelDir, "lm_bigrams")
+    Artifact.publish(uni, modelDir, "lm_unigrams")
+    Artifact.publish(Seq(vocab).toDF("v"), modelDir, "lm_vocab")
   }
 
   def lmScoreFromSaved(spark: SparkSession, modelDir: String,
       docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val vocab = load(spark, modelDir, "lm_vocab")
+    val vocab = saved(spark, modelDir, "lm_vocab")
       .agg(max($"v")).as[Long].head()
     TextAnalysis.lmScoreStream(docs,
-      load(spark, modelDir, "lm_bigrams"),
-      load(spark, modelDir, "lm_unigrams"), vocab)
+      saved(spark, modelDir, "lm_bigrams"),
+      saved(spark, modelDir, "lm_unigrams"), vocab)
   }
 
   /** Cold-start ingest curation: the full stateless gate chain
@@ -125,7 +121,7 @@ object Models {
     * node needs ONLY the model dir. */
   def ingestRowsFromSaved(spark: SparkSession, modelDir: String,
       rows: DataFrame): DataFrame =
-    Curate.ingestRows(rows, load(spark, modelDir, "mixture_thresholds"))
+    Curate.ingestRows(rows, saved(spark, modelDir, "mixture_thresholds"))
 
   /** Train-everything convenience: every small-model artifact the serving
     * surfaces need, into one model dir (single session; for retrains use a

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.Vec._
+import graft.storage.Artifact
 
 /** Similarity search over the `embeddings` fixture (`vec_id, embedding:
   * array<float>[64], label`): brute-force cosine top-k as the exact baseline,
@@ -1243,43 +1244,6 @@ object Similarity {
       .unionByName(dd)
   }
 
-  /** Resolve a base-artifact directory, completing an interrupted
-    * compaction swap if one is found: the compactors write the merged
-    * artifact to `<name>_compacting`, delete `<name>`, then rename — a
-    * crash between delete and rename leaves only the (fully written)
-    * `_compacting` dir, which this promotes before anyone reads. A partial
-    * `_compacting` left by a crash DURING the merge write is NEVER
-    * promoted — promotion requires the committer's `_SUCCESS` marker,
-    * which only a completed write job has. That distinction matters for
-    * the FIRST-ever write of an artifact (cursors, retention markers,
-    * `Models.save`): there is no main dir to fall back on, and promoting
-    * a half-written first write would serve torn parquet. Every crash
-    * point is therefore serve-consistent: mid-write → tmp ignored
-    * (main absent reads as "artifact never existed", the truth);
-    * post-commit pre-rename → promoted. Every reader and compactor of
-    * persisted artifacts goes through here. */
-  private[graft] def resolveArtifact(spark: SparkSession, indexDir: String,
-      name: String): String = {
-    val main = new org.apache.hadoop.fs.Path(s"$indexDir/$name")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/${name}_compacting")
-    val fs = main.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(main) && fs.exists(tmp) &&
-        fs.exists(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS")))
-      fs.rename(tmp, main)
-    s"$indexDir/$name"
-  }
-
-  /** The delete→rename swap every compactor ends with, preceded by
-    * [[resolveArtifact]] recovery on the target. */
-  private[graft] def swapArtifact(spark: SparkSession, indexDir: String,
-      name: String): Unit = {
-    val main = new org.apache.hadoop.fs.Path(s"$indexDir/$name")
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/${name}_compacting")
-    val fs = main.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(main, true)
-    fs.rename(tmp, main)
-  }
-
   /** The probe-select + cell-bounded ADC core over EXPLICIT index frames —
     * shared by the in-session build above and the persisted-index serving
     * path ([[topkIvfPqFromSaved]]); `qt` is the per-query distance-table
@@ -1641,7 +1605,7 @@ object Similarity {
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         encodeForIndex(spark, dir, batch)
           .withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(appendTarget(spark, storeDir))
+          .write.mode("append").parquet(Artifact.resolve(spark, storeDir))
       }
   }
 
@@ -1661,7 +1625,7 @@ object Similarity {
     * contract. */
   private[graft] def readEpochDelta(spark: SparkSession, storeDir: String,
       key: String): DataFrame = {
-    val raw = spark.read.parquet(appendTarget(spark, storeDir))
+    val raw = spark.read.parquet(Artifact.resolve(spark, storeDir))
     if (raw.columns.contains("epoch"))
       Ingest.latestPerKey(raw, key, col("epoch")).drop("epoch")
     else raw.dropDuplicates(key)
@@ -1702,7 +1666,7 @@ object Similarity {
     * compaction. */
   private[graft] def ivfPqAdcScanSaved(spark: SparkSession, q: DataFrame,
       indexDir: String, storeDir: Option[String]): DataFrame = {
-    val base = spark.read.parquet(resolveArtifact(spark, indexDir, "lists"))
+    val base = spark.read.parquet(Artifact.resolve(spark, indexDir, "lists"))
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val cb = spark.read.parquet(s"$indexDir/codebook")
     val lists = storeDir.fold(base)(s =>
@@ -1733,8 +1697,8 @@ object Similarity {
     * over the grown lake, scheduled when [[retrainAdvised]] trips.
     *
     * Crash-safety ordering: the merged lists land in a sibling directory
-    * first, then swap in ([[swapArtifact]] — the delete→rename window is
-    * recovered by [[resolveArtifact]] on the next read), then the delta
+    * first, then swap in ([[Artifact.publish]] — the delete→rename window
+    * is recovered by [[Artifact.resolve]] on the next read), then the delta
     * store truncates BOUNDED by the fold watermark
     * ([[truncateStoreThrough]]: only epochs the fold-read could have seen
     * are dropped; a live appender's later rows survive). A crash between
@@ -1748,22 +1712,20 @@ object Similarity {
     // the fold watermark lands BEFORE the delta read: anything at or
     // below it is folded; anything a live appender lands above it
     // survives the truncate
-    val raw = spark.read.parquet(appendTarget(spark, storeDir))
+    val raw = spark.read.parquet(Artifact.resolve(spark, storeDir))
     val foldedThrough =
       if (raw.columns.contains("epoch"))
         raw.agg(max(col("epoch"))).as[Option[Long]].head()
       else None
     val delta = readIndexDelta(spark, storeDir)
     if (delta.isEmpty) return
-    val base = spark.read.parquet(resolveArtifact(spark, indexDir, "lists"))
+    val base = spark.read.parquet(Artifact.resolve(spark, indexDir, "lists"))
     // a retraction tombstone (null cell — [[CorpusLake.refreshIndexFromLake]])
     // is spent once its vec's base rows are anti-joined away in THIS
     // rewrite — drop it so the base never accumulates dead rows for
     // deleted vectors (the lexical fold's twin rule)
-    mergeDeltaRows(base, delta, "vec_id")
-      .filter(col("cent_id").isNotNull)
-      .write.mode("overwrite").parquet(s"$indexDir/lists_compacting")
-    swapArtifact(spark, indexDir, "lists")
+    Artifact.publish(mergeDeltaRows(base, delta, "vec_id")
+      .filter(col("cent_id").isNotNull), indexDir, "lists")
     truncateStoreThrough(spark, storeDir, foldedThrough)
   }
 
@@ -1778,17 +1740,6 @@ object Similarity {
       .write.mode("overwrite").parquet(storeDir)
   }
 
-  /** Resolve-then-return an append target: if an interrupted compaction
-    * swap left only `<path>_compacting`, promote it BEFORE appending —
-    * an append that creates a fresh main dir would strand the completed
-    * rewrite (main now exists, so it never promotes) and silently drop
-    * its rows. Every appender to a swap-rewritten store goes through
-    * here. */
-  private[graft] def appendTarget(spark: SparkSession, path: String): String = {
-    val i = path.lastIndexOf('/')
-    resolveArtifact(spark, path.take(i), path.drop(i + 1))
-  }
-
   /** Truncate an append store down to the rows a fold has NOT consumed:
     * epoch-stamped rows at or below `foldedThrough` were visible to the
     * fold-read and live in the merged base, while rows ABOVE it — an
@@ -1796,19 +1747,15 @@ object Similarity {
     * beside a live appender loses nothing it did not fold (a row both
     * folded and kept is served once by the keyed merge). `None` (an
     * epoch-less store: no watermark to bound by) falls back to the full
-    * [[truncateStore]]. The rewrite goes through the `_compacting` swap
-    * every reader and appender resolves. */
+    * [[truncateStore]]. The rewrite goes through [[Artifact.publish]],
+    * whose swap every reader and appender resolves. */
   private[graft] def truncateStoreThrough(spark: SparkSession,
       storeDir: String, foldedThrough: Option[Long]): Unit =
     foldedThrough match {
       case None => truncateStore(spark, storeDir)
       case Some(m) =>
-        val i = storeDir.lastIndexOf('/')
-        val (parent, name) = (storeDir.take(i), storeDir.drop(i + 1))
-        spark.read.parquet(resolveArtifact(spark, parent, name))
-          .filter(col("epoch") > m)
-          .write.mode("overwrite").parquet(s"${storeDir}_compacting")
-        swapArtifact(spark, parent, name)
+        Artifact.publish(spark.read.parquet(Artifact.resolve(spark, storeDir))
+          .filter(col("epoch") > m), storeDir)
     }
 
   /** Coalesce an append store's many small per-batch files into
@@ -1820,16 +1767,13 @@ object Similarity {
     * the collapse every reader already applies); rows are range-
     * partitioned and sorted on `sortKeys` so parquet footer min/max
     * stats serve the readers' key lookups after the per-batch layout is
-    * gone. Rides the `_compacting` swap; callers run it inside the
+    * gone. Rides [[Artifact.publish]]; callers run it inside the
     * serialized foreachBatch slot (the no-concurrent-append quiescence
     * every wholesale rewrite here assumes). No-op on a missing store. */
   private[graft] def coalesceStore(spark: SparkSession, storeDir: String,
       dedupKeys: Seq[String], sortKeys: Seq[String],
       targetRowsPerFile: Long = 1L << 20): Unit = {
-    val i = storeDir.lastIndexOf('/')
-    val (parent, name) = (storeDir.take(i), storeDir.drop(i + 1))
-    val p = resolveArtifact(spark, parent, name)
-    if (!graft.sources.Formats.pathExists(spark, p)) return
+    val p = Artifact.find(spark, storeDir).getOrElse(return)
     // mergeSchema: a store whose epochs carry evolved schemas must not
     // lose a column to whichever file the plain reader samples; the
     // rewrite physically unifies the schema (nulls backfilled)
@@ -1844,11 +1788,9 @@ object Similarity {
       val n = rows.count()
       val nFiles = math.max(1L,
         (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      rows.repartitionByRange(nFiles, sortKeys.map(col): _*)
-        .sortWithinPartitions(sortKeys.map(col): _*)
-        .write.mode("overwrite").parquet(s"${storeDir}_compacting")
+      Artifact.publish(rows.repartitionByRange(nFiles, sortKeys.map(col): _*)
+        .sortWithinPartitions(sortKeys.map(col): _*), storeDir)
     } finally rows.unpersist()
-    swapArtifact(spark, parent, name)
   }
 
   /** The retrain job [[retrainAdvised]] schedules — the one operation the
@@ -1975,10 +1917,9 @@ object Similarity {
     val empty = spark.range(0).select($"id".as("cell_id"),
       lit(0L).as("n_base"), lit(0L).as("n_delta"),
       lit(0L).as("shift_ppm"), lit(false).as("shifted")).limit(0)
-    val deltaPath = appendTarget(spark, storeDir)
-    if (!graft.sources.Formats.pathExists(spark, deltaPath)) return empty
+    if (Artifact.find(spark, storeDir).isEmpty) return empty
     val base = spark.read
-      .parquet(resolveArtifact(spark, indexDir, "lists"))
+      .parquet(Artifact.resolve(spark, indexDir, "lists"))
       .filter($"cent_id".isNotNull)
       .groupBy($"cent_id".as("cell_id")).agg(count(lit(1)).as("n_base"))
     val delta = readIndexDelta(spark, storeDir)
@@ -2053,17 +1994,17 @@ object Similarity {
         val n = batch.count()
         encodeForIndex(spark, dir, batch)
           .withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(
-            appendTarget(spark, s"$maintDir/lists"))
+          .write.mode("append")
+          .parquet(Artifact.resolve(spark, s"$maintDir/lists"))
         batch.select($"vec_id", $"embedding")
           .withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(
-            appendTarget(spark, s"$maintDir/vecs"))
-        if (baseCount < 0) baseCount =
-          spark.read.parquet(resolveArtifact(spark, indexDir, "lists")).count()
+          .write.mode("append")
+          .parquet(Artifact.resolve(spark, s"$maintDir/vecs"))
+        if (baseCount < 0) baseCount = spark.read
+          .parquet(Artifact.resolve(spark, indexDir, "lists")).count()
         if (deltaCount < 0)
-          deltaCount = spark.read.parquet(
-            appendTarget(spark, s"$maintDir/lists")).count()
+          deltaCount = spark.read
+            .parquet(Artifact.resolve(spark, s"$maintDir/lists")).count()
         else deltaCount += n
         if (advise) {
           // the advisory measures the REAL serving leg (persisted base ∪
@@ -2074,8 +2015,8 @@ object Similarity {
             .as[(Double, Boolean)].head()
           Seq((epoch, m._1, m._2))
             .toDF("epoch", "mean_recall", "retrain_advised")
-            .write.mode("append").parquet(
-              appendTarget(spark, s"$maintDir/advisory"))
+            .write.mode("append")
+            .parquet(Artifact.resolve(spark, s"$maintDir/advisory"))
         }
         if (deltaCount > 0 && deltaCount >= compactAt * baseCount) {
           compactIndex(spark, indexDir, s"$maintDir/lists")
@@ -2098,7 +2039,7 @@ object Similarity {
     * plain append (no key on disk), so a crash-replayed epoch appends its
     * row twice — dedup by epoch on read, like every other store. */
   def readAdvisory(spark: SparkSession, maintDir: String): DataFrame =
-    spark.read.parquet(appendTarget(spark, s"$maintDir/advisory"))
+    spark.read.parquet(Artifact.resolve(spark, s"$maintDir/advisory"))
       .dropDuplicates("epoch")
 
   /** The deterministic BATCH twin of the ingest-append encode, as its own

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.Text._
+import graft.storage.Artifact
 
 /** Text-analysis operators over the `documents` fixture: token counting,
   * n-gram language identification, quality scoring, and document
@@ -581,8 +582,7 @@ object TextAnalysis {
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         encodeForPostings(batch)
           .withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(
-            graft.operators.Similarity.appendTarget(spark, storeDir))
+          .write.mode("append").parquet(Artifact.resolve(spark, storeDir))
       }
   }
 
@@ -595,8 +595,7 @@ object TextAnalysis {
     * safe only under the append-only/byte-identical-replay contract. */
   def readPostingsDelta(spark: SparkSession, storeDir: String): DataFrame = {
     import spark.implicits._
-    val raw = spark.read.parquet(
-      graft.operators.Similarity.appendTarget(spark, storeDir))
+    val raw = spark.read.parquet(Artifact.resolve(spark, storeDir))
     if (raw.columns.contains("epoch"))
       raw.dropDuplicates("doc_id", "tok", "epoch")
         .withColumn("_maxe", max($"epoch").over(
@@ -622,8 +621,7 @@ object TextAnalysis {
   def compactPostings(spark: SparkSession, indexDir: String,
       storeDir: String): Unit = {
     import spark.implicits._
-    val raw = spark.read.parquet(
-      graft.operators.Similarity.appendTarget(spark, storeDir))
+    val raw = spark.read.parquet(Artifact.resolve(spark, storeDir))
     val foldedThrough =
       if (raw.columns.contains("epoch"))
         raw.agg(org.apache.spark.sql.functions.max($"epoch"))
@@ -632,16 +630,16 @@ object TextAnalysis {
     val delta = readPostingsDelta(spark, storeDir)
     if (delta.isEmpty) return
     val base = spark.read.parquet(
-      graft.operators.Similarity.resolveArtifact(spark, indexDir, "postings"))
+      Artifact.resolve(spark, indexDir, "postings"))
     // a retraction tombstone (null token — [[CorpusLake.refreshPostingsFromLake]])
     // is spent once its doc's base rows are anti-joined away in THIS
     // rewrite: it shadows nothing afterwards (any future delta row takes
     // per-doc priority through the serving merge regardless), so the fold
     // drops it — the base never accumulates dead rows for deleted docs
-    graft.operators.Similarity.mergeDeltaRows(base, delta, "doc_id")
-      .filter(col("tok").isNotNull)
-      .write.mode("overwrite").parquet(s"$indexDir/postings_compacting")
-    graft.operators.Similarity.swapArtifact(spark, indexDir, "postings")
+    Artifact.publish(
+      graft.operators.Similarity.mergeDeltaRows(base, delta, "doc_id")
+        .filter(col("tok").isNotNull),
+      indexDir, "postings")
     graft.operators.Similarity.truncateStoreThrough(spark, storeDir,
       foldedThrough)
     // the loaded-artifact memo now points at the PRE-compaction file set —
@@ -703,18 +701,18 @@ object TextAnalysis {
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         val seg = encodeForPostings(batch).withColumn("epoch", lit(epoch))
         val n = seg.count()
-        seg.write.mode("append").parquet(graft.operators.Similarity
-          .appendTarget(spark, s"$maintDir/seg"))
+        seg.write.mode("append")
+          .parquet(Artifact.resolve(spark, s"$maintDir/seg"))
         adviseDir.foreach { _ =>
           batch.select($"doc_id", $"text").withColumn("epoch", lit(epoch))
-            .write.mode("append").parquet(graft.operators.Similarity
-              .appendTarget(spark, s"$maintDir/docs"))
+            .write.mode("append")
+            .parquet(Artifact.resolve(spark, s"$maintDir/docs"))
         }
         if (baseCount < 0) baseCount = spark.read.parquet(
-          graft.operators.Similarity.resolveArtifact(spark, indexDir, "postings")).count()
+          Artifact.resolve(spark, indexDir, "postings")).count()
         if (deltaCount < 0)
-          deltaCount = spark.read.parquet(graft.operators.Similarity
-            .appendTarget(spark, s"$maintDir/seg")).count()
+          deltaCount = spark.read
+            .parquet(Artifact.resolve(spark, s"$maintDir/seg")).count()
         else deltaCount += n
         if (deltaCount > 0 && deltaCount >= compactAt * baseCount) {
           adviseDir.foreach { d =>
@@ -893,8 +891,7 @@ object TextAnalysis {
     graft.sources.Caches.memoizedValue(spark, s"text-bm25-index-saved|$indexDir") {
       import spark.implicits._
       val tf = graft.sources.Caches.shared(
-        spark.read.parquet(graft.operators.Similarity
-          .resolveArtifact(spark, indexDir, "postings")))
+        spark.read.parquet(Artifact.resolve(spark, indexDir, "postings")))
       val dfreq = graft.sources.Caches.shared(
         spark.read.parquet(s"$indexDir/df"))
       val (nDocs, avgdl) = spark.read.parquet(s"$indexDir/stats")

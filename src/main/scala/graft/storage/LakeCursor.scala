@@ -2,14 +2,13 @@ package graft.storage
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max}
-import graft.operators.Similarity
-import graft.sources.{Caches, Formats}
+import graft.sources.Caches
 
 /** A lake consumer's progress cursor: the last lake version it consumed,
   * stored as a one-row `last_version` parquet dir `<dir>/<name>` and
-  * replaced through `<name>_compacting` + [[Similarity.swapArtifact]], so
-  * a crash mid-write leaves either the old cursor or a `_SUCCESS`-marked
-  * twin that the next read promotes. Every lake-fed consumer (replica,
+  * replaced through [[Artifact.publish]], so a crash mid-write leaves
+  * either the old cursor or a `_SUCCESS`-marked twin that the next read
+  * promotes. Every lake-fed consumer (replica,
   * postings, dense lists, profile, views) keeps its progress here, and
   * advances it LAST: data first, cursor after, so a crash anywhere
   * replays the window — which every consumer's epoch-stamped store
@@ -22,20 +21,18 @@ object LakeCursor {
     * each time; the swap rewrites the dir, so the signature invalidates
     * at the write. */
   def read(spark: SparkSession, dir: String, name: String): Long = {
-    val p = Similarity.resolveArtifact(spark, dir, name)
-    if (!Formats.pathExists(spark, p)) Long.MinValue
-    else Caches.bySignature[Long](spark, "lake_cursor", p) {
-      import spark.implicits._
-      spark.read.parquet(p).agg(max(col("last_version"))).as[Long].head()
+    Artifact.find(spark, dir, name).fold(Long.MinValue) { p =>
+      Caches.bySignature[Long](spark, "lake_cursor", p) {
+        import spark.implicits._
+        spark.read.parquet(p).agg(max(col("last_version"))).as[Long].head()
+      }
     }
   }
 
   /** Replace the cursor with `v` (write the twin, then swap). */
   def write(spark: SparkSession, dir: String, name: String, v: Long): Unit = {
     import spark.implicits._
-    Seq(v).toDF("last_version").write.mode("overwrite")
-      .parquet(s"$dir/${name}_compacting")
-    Similarity.swapArtifact(spark, dir, name)
+    Artifact.publish(Seq(v).toDF("last_version"), dir, name)
   }
 
   /** The newest version in `manifest` above `from`, at most `upTo` (a

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryListener
+import graft.sources.Formats
+import graft.storage.Artifact
 
 /** Ops observability for long-lived streaming pipelines: a
   * [[StreamingQueryListener]] that appends ONE parquet row per finished
@@ -111,17 +113,17 @@ object StreamMetrics {
       lit(0.0).as("input_rows_per_sec"),
       lit(0.0).as("processed_rows_per_sec"),
       lit(0L).as("batch_duration_ms"), lit(0L).as("state_rows")).limit(0)
-    def readDir(p: String): Option[DataFrame] =
-      if (!graft.sources.Formats.pathExists(spark, p)) None
-      else try Some(spark.read.parquet(p))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+    def readDir(p: Option[String]): Option[DataFrame] =
+      p.flatMap(d => try Some(spark.read.parquet(d))
+        catch { case _: org.apache.spark.sql.AnalysisException => None })
+    val spool = s"$metricsDir/batches_spool"
     // compacted store ∪ the listener's spool; a row can live in both for
     // the window between a compaction's swap and its spool drain (or
     // across a crash between them) — (run_id, batch_id) is unique per
     // completed batch, so the dedup serves it once either way
-    val parts = readDir(graft.operators.Similarity.resolveArtifact(
-        spark, metricsDir, "batches")).toSeq ++
-      readDir(s"$metricsDir/batches_spool").toSeq
+    val parts =
+      readDir(Artifact.find(spark, metricsDir, "batches")).toSeq ++
+      readDir(Some(spool).filter(Formats.pathExists(spark, _))).toSeq
     parts.reduceOption(_ unionByName _)
       .map(_.dropDuplicates("run_id", "batch_id"))
       .getOrElse(empty)
@@ -136,7 +138,7 @@ object StreamMetrics {
       lit("").as("query_id"), lit("").as("run_id"),
       col("id").as("wall_millis"), lit(false).as("failed"),
       lit("").as("error")).limit(0)
-    if (!graft.sources.Formats.pathExists(spark, p)) empty
+    if (!Formats.pathExists(spark, p)) empty
     else try spark.read.parquet(p)
     catch { case _: org.apache.spark.sql.AnalysisException => empty }
   }
@@ -176,7 +178,7 @@ object StreamMetrics {
   }
 
   /** Fold the one-file-per-batch spool accretion into the single sorted
-    * `batches` store via the `_compacting` swap — run it on the same
+    * `batches` store via [[Artifact.publish]] — run it on the same
     * maintenance cadence as the other append stores. Safe beside the
     * LIVE listener with no quiesce point: the spool files to drain are
     * listed FIRST, only those exact files are folded and deleted, so an
@@ -184,8 +186,7 @@ object StreamMetrics {
     * and the swap target (`batches`) has exactly one writer — this
     * compactor. Returns (files before, files after). */
   def compactMetrics(spark: SparkSession, metricsDir: String): (Long, Long) = {
-    val mainPath = graft.operators.Similarity.resolveArtifact(
-      spark, metricsDir, "batches")
+    val main = Artifact.find(spark, metricsDir, "batches")
     val spool = new org.apache.hadoop.fs.Path(s"$metricsDir/batches_spool")
     val fs = spool.getFileSystem(spark.sessionState.newHadoopConf())
     val spoolFiles: Seq[org.apache.hadoop.fs.Path] =
@@ -201,22 +202,18 @@ object StreamMetrics {
         }
         b.result()
       }
-    val haveMain = graft.sources.Formats.pathExists(spark, mainPath)
-    if (!haveMain && spoolFiles.isEmpty) return (0L, 0L)
-    val before =
-      (if (haveMain) graft.operators.CorpusLake.dataFileCount(spark, mainPath)
-       else 0L) + spoolFiles.size
-    val parts =
-      (if (haveMain) Seq(spark.read.parquet(mainPath)) else Nil) ++
+    if (main.isEmpty && spoolFiles.isEmpty) return (0L, 0L)
+    val before = main.fold(0L)(
+      graft.operators.CorpusLake.dataFileCount(spark, _)) + spoolFiles.size
+    val parts = main.map(spark.read.parquet(_)).toSeq ++
       (if (spoolFiles.nonEmpty)
          Seq(spark.read.parquet(spoolFiles.map(_.toString): _*))
        else Nil)
-    parts.reduce(_ unionByName _)
+    Artifact.publish(parts.reduce(_ unionByName _)
       .dropDuplicates("run_id", "batch_id")
       .repartitionByRange(1, col("query_id"), col("batch_id"))
-      .sortWithinPartitions(col("query_id"), col("batch_id"))
-      .write.mode("overwrite").parquet(s"$metricsDir/batches_compacting")
-    graft.operators.Similarity.swapArtifact(spark, metricsDir, "batches")
+      .sortWithinPartitions(col("query_id"), col("batch_id")),
+      metricsDir, "batches")
     // drain ONLY what was folded; a crash before this line re-serves the
     // duplicates through the readers' (run_id, batch_id) dedup
     spoolFiles.foreach(f => fs.delete(f, false))

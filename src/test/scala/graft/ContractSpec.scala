@@ -137,6 +137,21 @@ class ContractSpec extends SparkSpec {
     assert(e.getMessage.contains("CORRECTNESS_r99.json"), e.getMessage)
     assert(e.getCause.isInstanceOf[java.nio.charset.MalformedInputException])
   }
+
+  test("only graft/storage spells the artifact twin name") {
+    // the write-twin/delete/rename protocol lives in graft.storage.Artifact;
+    // a `_compacting` string literal anywhere else is a copy of it
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"no sources under ${root.toAbsolutePath}")
+    val storage = root.resolve("graft/storage")
+    val hits = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.startsWith(storage))
+      .filter(p => java.nio.file.Files.readString(p).contains("_compacting\""))
+      .map(root.relativize(_).toString).toSeq.sorted
+    assert(hits.isEmpty, s"twin-name literals outside graft/storage: $hits")
+  }
 }
 
 /** Static lint over DuckDB oracle SQL: finds `sum(`/`list_sum(` occurrences

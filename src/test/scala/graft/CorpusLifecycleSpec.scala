@@ -534,7 +534,7 @@ class CorpusLifecycleSpec extends SparkSpec {
     val (idx, corpus, maint) = (s"$tmp/idx", s"$tmp/corpus", s"$tmp/maint")
     CorpusLake.initCorpus(spark, dir, idx)
     def baseBuckets(id: Long): Long = spark.read.parquet(
-        graft.operators.Similarity.resolveArtifact(spark, idx, "buckets"))
+        graft.storage.Artifact.resolve(spark, idx, "buckets"))
       .filter($"doc_id" === id).count()
 
     val in = MemoryStream[(Long, String, Boolean)]

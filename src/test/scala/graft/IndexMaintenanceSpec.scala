@@ -633,11 +633,11 @@ class IndexMaintenanceSpec extends SparkSpec {
     fs.mkdirs(part)
     val junk = fs.create(new org.apache.hadoop.fs.Path(part, "part-0.parquet"))
     junk.write("not parquet".getBytes); junk.close()
-    Similarity.resolveArtifact(spark, idx, "fresh")
+    graft.storage.Artifact.resolve(spark, idx, "fresh")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$idx/fresh")),
       "resolver promoted a partial (no _SUCCESS) first write")
     fs.create(new org.apache.hadoop.fs.Path(part, "_SUCCESS")).close()
-    Similarity.resolveArtifact(spark, idx, "fresh")
+    graft.storage.Artifact.resolve(spark, idx, "fresh")
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$idx/fresh")),
       "resolver did not promote a completed (marker present) first write")
     Caches.releaseAll()

@@ -301,12 +301,12 @@ class LakeMaintenanceSpec extends SparkSpec {
       "compaction resurrected the deleted doc on the dense leg")
     // ... and the fold is also the GC: neither base carries ANY rows for
     // the deleted doc (the spent tombstone is dropped with them)
-    assert(spark.read.parquet(graft.operators.Similarity
-        .resolveArtifact(spark, lex, "postings"))
+    assert(spark.read.parquet(graft.storage.Artifact
+        .resolve(spark, lex, "postings"))
       .filter($"doc_id" === docId).count() == 0,
       "deleted doc's rows (or its tombstone) survived in the postings base")
-    assert(spark.read.parquet(graft.operators.Similarity
-        .resolveArtifact(spark, dIdx, "lists"))
+    assert(spark.read.parquet(graft.storage.Artifact
+        .resolve(spark, dIdx, "lists"))
       .filter($"vec_id" === docId).count() == 0,
       "deleted vec's rows (or its tombstone) survived in the lists base")
     Caches.releaseAll()
@@ -546,9 +546,8 @@ class LakeMaintenanceSpec extends SparkSpec {
     // crash replay: lose the cursor mid-way (reset to v0), re-run — the
     // overlapping window recomputes byte-identical (band, version) rows
     // that collapse on read
-    Seq(v0).toDF("last_version")
-      .write.mode("overwrite").parquet(s"$prof/cursor_compacting")
-    graft.operators.Similarity.swapArtifact(spark, prof, "cursor")
+    graft.storage.Artifact.publish(Seq(v0).toDF("last_version"), prof,
+      "cursor")
     assert(CorpusLake.refreshProfileFromLake(spark, dir, corpus, prof)
       .contains((v0, v2)))
     assert(served() == recompute(),
@@ -599,9 +598,8 @@ class LakeMaintenanceSpec extends SparkSpec {
     // retractions wrong (collapsed history) — the refresh must refuse a
     // stale cursor instead of silently corrupting the view
     CorpusLake.vacuumCorpus(spark, corpus, v3)
-    Seq(v2).toDF("last_version")
-      .write.mode("overwrite").parquet(s"$prof/cursor_compacting")
-    graft.operators.Similarity.swapArtifact(spark, prof, "cursor")
+    graft.storage.Artifact.publish(Seq(v2).toDF("last_version"), prof,
+      "cursor")
     intercept[IllegalArgumentException] {
       CorpusLake.refreshProfileFromLake(spark, dir, corpus, prof)
     }

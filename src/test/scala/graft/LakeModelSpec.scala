@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{CorpusLake, Similarity}
+import graft.operators.CorpusLake
 import graft.sources.{Caches, Tables}
 
 /** Model-based lifecycle check for the versioned corpus lake: a seeded
@@ -72,7 +72,7 @@ class LakeModelSpec extends SparkSpec {
             // the live sub-store of the CURRENT generation, as the
             // maintenance loop appends (writers follow the store_head
             // pointer once a versioned rewrite has flipped it)
-            .parquet(Similarity.appendTarget(spark,
+            .parquet(graft.storage.Artifact.resolve(spark,
               s"$corpus/" + CorpusLake.storeName(spark, corpus, "docs")) + "/live")
       def writeManifest(e: Long): Unit =
         Seq((e, 0L, 0L, 0L, 0L, 0L))
