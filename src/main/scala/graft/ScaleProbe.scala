@@ -270,10 +270,10 @@ object ScaleProbe {
             .createTempDirectory("probe-compact").toString
           val store = s"$idx/store"
           Similarity.saveIndex(spark, dir, idx)
-          enc.withColumn("epoch", lit(0L)).write.mode("append").parquet(store)
+          graft.storage.DeltaStore.append(enc, store, 0L)
           Similarity.compactIndex(spark, idx, store)
           // crash-replay of the compacted epoch into the truncated store
-          enc.withColumn("epoch", lit(0L)).write.mode("append").parquet(store)
+          graft.storage.DeltaStore.append(enc, store, 0L)
           (Similarity.ivfPqAdcScanSaved(spark, q, idx, Some(store)).count(), o)
         }),
         // drift-advisory cost: C = rows entering the recall comparison

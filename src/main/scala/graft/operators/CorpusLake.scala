@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.functions.Text.tokens
 import graft.sources.Tables
-import graft.storage.{Artifact, LakeCursor}
+import graft.storage.{Artifact, DeltaStore, LakeCursor}
 
 /** The versioned training-corpus lake: admission-gated ingest with a
   * manifest-last commit protocol and manifest-pinned time travel.
@@ -474,12 +474,9 @@ object CorpusLake {
     import spark.implicits._
     val head = manifest(spark, corpusDir).agg(max(col("version")))
       .as[Option[Long]].head().getOrElse(-1L)
-    val storeMax = Seq("docs", "decisions").flatMap { name =>
-      readStore(spark, corpusDir, name).flatMap { df =>
-        if (!df.columns.contains("epoch")) None
-        else df.agg(max(col("epoch"))).as[Option[Long]].head()
-      }
-    }.foldLeft(-1L)(math.max)
+    val storeMax = Seq("docs", "decisions")
+      .flatMap(readStore(spark, corpusDir, _).flatMap(DeltaStore.maxEpoch))
+      .foldLeft(-1L)(math.max)
     math.max(head, storeMax) + 1L
   }
 
@@ -1289,7 +1286,7 @@ object CorpusLake {
     * the epoch with a manifest row LAST, keeps the dedup index self-
     * consistent with the lake (admitted bucket rows appended per batch,
     * folded into the persisted base at the `compactAt` delta fraction —
-    * [[Dedup.compactDedupIndex]]'s crash-safe swap), and never touches the
+    * [[DeltaStore]]'s trigger and fold), and never touches the
     * serving path: every write is an append, every read is manifest-pinned.
     *
     * Per-batch cost: admission SHUFFLES only batch-and-candidate-sized
@@ -1399,8 +1396,8 @@ object CorpusLake {
     var commitsSinceViewRefresh = 0L
     val benchPost = graft.sources.Caches.shared(Curate.benchPostings(
       spark, dir, Dedup.incrementalStride(Tables.nDocs(spark, dir))))
-    var baseCount = -1L
-    var deltaCount = -1L
+    val trigger = new DeltaStore.Trigger(spark, compactAt,
+      s"$indexDir/buckets", s"$maintDir/buckets")
     docStream.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -1522,10 +1519,8 @@ object CorpusLake {
             .write.mode("append").parquet(
               liveTarget(spark, corpusDir, "decisions"))
           val newBuckets = Dedup.bucketRows(Dedup.signRows(admitted))
-            .withColumn("epoch", lit(epoch))
           val n = newBuckets.count()
-          newBuckets.write.mode("append")
-            .parquet(Artifact.resolve(spark, store))
+          DeltaStore.append(newBuckets, store, epoch)
           // the manifest row commits the epoch — LAST, after every data
           // write, and only if this writer STILL holds the lease (a batch
           // that outran the TTL aborts here instead of double-assigning)
@@ -1549,17 +1544,10 @@ object CorpusLake {
               lit(System.currentTimeMillis()).as("committed_at"),
               $"n_invalid", lit(tag).as("commit_tag"))
             .write.mode("append").parquet(manifestTarget(spark, corpusDir))
-          // index upkeep (the maintainDedupIndexStream counters, verbatim)
-          if (baseCount < 0) baseCount = spark.read.parquet(
-            Artifact.resolve(spark, indexDir, "buckets")).count()
-          if (deltaCount < 0) deltaCount = spark.read.parquet(
-            Artifact.resolve(spark, store)).count()
-          else deltaCount += n
-          if (deltaCount > 0 && deltaCount >= compactAt * baseCount) {
+          // index upkeep ([[DeltaStore.Trigger]])
+          trigger.afterAppend(n) {
             // fold ONLY committed epochs (this epoch's manifest row just
-            // landed — re-read it) and keep uncommitted rows in the store;
-            // deltaCount=0 slightly undercounts any surviving crashed rows,
-            // which only delays the next trigger
+            // landed — re-read it) and keep uncommitted rows in the store
             // the fold doubles as tombstone GC: taken-down docs' stale
             // bucket rows leave the index (verdicts unchanged — their
             // candidates already failed the null-text verify; this just
@@ -1568,8 +1556,6 @@ object CorpusLake {
             Dedup.compactDedupIndex(spark, indexDir, store,
               Some(manifest(spark, corpusDir).select($"version".as("epoch"))),
               retract = Some(deletedIds(spark, corpusDir)))
-            baseCount = -1
-            deltaCount = 0
           }
           // inline INCREMENTAL optimize at a commit-count cadence:
           // foreachBatch serializes batches, so this slot IS the
@@ -1819,9 +1805,7 @@ object CorpusLake {
         .select($"doc_id", lit(null).cast("int").as("dl"),
           lit(null).cast("string").as("tok"),
           lit(null).cast("long").as("tf"), $"version".as("epoch"))
-      upserts.unionByName(tombstones)
-        .write.mode("append")
-        .parquet(Artifact.resolve(spark, s"$maintDir/seg"))
+      DeltaStore.append(upserts.unionByName(tombstones), s"$maintDir/seg")
     }
 
   /** Lake-commit-driven DENSE index refresh — [[refreshPostingsFromLake]]'s
@@ -1877,9 +1861,7 @@ object CorpusLake {
           enc.schema.fields.filterNot(_.name == "vec_id").toSeq
             .map(f => lit(null).cast(f.dataType).as(f.name)) :+
           col("version").as("epoch"): _*)
-      upserts.unionByName(tombstones)
-        .write.mode("append")
-        .parquet(Artifact.resolve(spark, s"$maintDir/lists"))
+      DeltaStore.append(upserts.unionByName(tombstones), s"$maintDir/lists")
     }
 
   // ------------- incrementally-maintained materialized profile
@@ -3118,7 +3100,7 @@ object CorpusLake {
     * cadence runs. The maintenance loop appends into `<store>/live/`;
     * each pass reads ONLY that live window (never the lake), packs it
     * into one sorted `packed_<maxEpoch>` segment, then truncates live
-    * bounded by the fold watermark ([[Similarity.truncateStoreThrough]]:
+    * bounded by the fold watermark ([[DeltaStore.truncateStoreThrough]]:
     * rows a crash-replay lands after the read survive). Crash at any
     * point is serve-consistent: segment-before-truncate means the packed
     * rows briefly coexist with their live originals — byte-identical,
@@ -3132,7 +3114,6 @@ object CorpusLake {
     * data files reclaimed). */
   def optimizeCorpusIncremental(spark: SparkSession, corpusDir: String,
       targetRowsPerFile: Long = 1L << 20): (Long, Long) = {
-    import spark.implicits._
     var (packed, reclaimed) = (0L, 0L)
     for (name <- Seq("docs", "decisions")) {
       val store = Artifact.resolve(spark, corpusDir,
@@ -3140,10 +3121,7 @@ object CorpusLake {
       Artifact.find(spark, store, "live").foreach { live =>
         val filesBefore = dataFileCount(spark, live)
         val raw = spark.read.option("mergeSchema", "true").parquet(live)
-        val foldedThrough =
-          if (raw.columns.contains("epoch"))
-            raw.agg(max(col("epoch"))).as[Option[Long]].head()
-          else None
+        val foldedThrough = DeltaStore.maxEpoch(raw)
         val rows = raw.dropDuplicates(replayKey(raw)).persist()
         try {
           val n = rows.count()
@@ -3154,7 +3132,7 @@ object CorpusLake {
               .sortWithinPartitions(col("epoch"), col("doc_id"))
               .write.mode("overwrite")
               .parquet(s"$store/packed_${foldedThrough.getOrElse(0L)}")
-            Similarity.truncateStoreThrough(spark, live, foldedThrough)
+            DeltaStore.truncateStoreThrough(spark, live, foldedThrough)
             packed += n
             reclaimed += filesBefore
           }
@@ -3211,7 +3189,7 @@ object CorpusLake {
       // committed row at one (doc_id, epoch) into an arbitrary survivor
       val keys = readStore(spark, corpusDir, name)
         .map(replayKey).getOrElse(Seq("doc_id", "epoch"))
-      Similarity.coalesceStore(spark, p, keys, Seq("epoch", "doc_id"),
+      DeltaStore.coalesceStore(spark, p, keys, Seq("epoch", "doc_id"),
         targetRowsPerFile)
       after += dataFileCount(spark, p)
     }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.Text._
-import graft.storage.Artifact
+import graft.storage.{Artifact, DeltaStore}
 
 /** Deduplication operators for large-scale training-data pipelines:
   * exact (hash-groupBy), MinHash+LSH, SimHash, and blocked n-gram Jaccard.
@@ -270,16 +270,13 @@ object Dedup {
     docStream.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        bucketRows(signRows(batch))
-          .withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(Artifact.resolve(spark, storeDir))
+        DeltaStore.append(bucketRows(signRows(batch)), storeDir, epoch)
       }
   }
 
-  /** Replay-safe read of the appended bucket rows: byte-identical replay
-    * copies collapse on the full key, then the latest epoch wins per
-    * DOCUMENT (a changed re-upload replaces its whole bucket set — the
-    * [[graft.operators.TextAnalysis.readPostingsDelta]] semantics).
+  /** Replay-safe read of the appended bucket rows: each document's whole
+    * bucket set at its newest epoch ([[DeltaStore.latestDocs]] on
+    * (doc_id, band)).
     * `committed` restricts the read to epochs present in the given
     * one-column `epoch` frame — the corpus lake passes its manifest here
     * so a crashed (manifest-less) epoch's bucket rows never serve: without
@@ -302,29 +299,26 @@ object Dedup {
       stores: Seq[(String, Option[Long])],
       committed: Option[DataFrame] = None): DataFrame = {
     val raws = stores.map { case (storeDir, cap) =>
-      val raw = spark.read.parquet(Artifact.resolve(spark, storeDir))
+      val raw = DeltaStore.read(spark, storeDir)
       cap.fold(raw)(c => raw.filter(col("epoch") <= c))
     }
     val raw0 = raws.reduce(_.unionByName(_, allowMissingColumns = true))
-    val raw = committed.fold(raw0)(c =>
-      raw0.join(c.select(col("epoch")), Seq("epoch"), "left_semi"))
-    raw.dropDuplicates("doc_id", "band", "epoch")
-      .withColumn("_maxe", max(col("epoch")).over(
-        Window.partitionBy(col("doc_id"))))
-      .filter(col("epoch") === col("_maxe")).drop("_maxe", "epoch")
+    DeltaStore.latestDocs(committed.fold(raw0)(c =>
+      raw0.join(c.select(col("epoch")), Seq("epoch"), "left_semi")),
+      "doc_id", "band")
   }
 
-  /** Fold the appended bucket rows into the persisted base index — same
-    * crash-safe tmp-swap-truncate ordering and serve-consistency argument
-    * as [[graft.operators.Similarity.compactIndex]] (a crash between swap
-    * and truncate leaves rows in both base and store, which the doc-level
-    * merge in [[dedupArrivalsFromSaved]] already serves correctly).
+  /** Fold the appended bucket rows into the persisted base index
+    * ([[DeltaStore.fold]], which states the crash order; the doc-level
+    * merge in [[dedupArrivalsFromSaved]] serves the overlap a crash
+    * between publish and truncate leaves).
     * With `committed` (the lake's manifest), ONLY committed epochs fold
     * and the truncate keeps the uncommitted rows in place — folding a
     * crashed manifest-less epoch into the base would make its dead rows
     * committed-looking forever, poisoning every later admission verdict
-    * against them. */
-  /** `retract`: doc_ids whose bucket rows should be DROPPED from the
+    * against them.
+    *
+    * `retract`: doc_ids whose bucket rows should be DROPPED from the
     * merged base during the fold — the lake passes its currently-deleted
     * id set ([[graft.operators.CorpusLake.deleteDocs]] tombstones) so a
     * taken-down doc's stale bucket rows stop accumulating in the index.
@@ -334,39 +328,12 @@ object Dedup {
     * identical before and after the GC — cheaper, not different. */
   def compactDedupIndex(spark: SparkSession, indexDir: String,
       storeDir: String, committed: Option[DataFrame] = None,
-      retract: Option[DataFrame] = None): Unit = {
-    // the fold watermark lands BEFORE the delta read (truncate contract:
-    // only rows the fold could have seen may be dropped)
-    val foldedThrough = {
-      import spark.implicits._
-      spark.read.parquet(Artifact.resolve(spark, storeDir))
-        .agg(max(col("epoch"))).as[Option[Long]].head()
+      retract: Option[DataFrame] = None): Unit =
+    DeltaStore.fold(spark, storeDir, indexDir, "buckets", "doc_id",
+        committed)(readDedupDelta(spark, storeDir, committed)) { merged =>
+      retract.fold(merged)(ids =>
+        merged.join(ids.select(col("doc_id")), Seq("doc_id"), "left_anti"))
     }
-    val delta = readDedupDelta(spark, storeDir, committed)
-    if (delta.isEmpty) return
-    val base = spark.read.parquet(
-      Artifact.resolve(spark, indexDir, "buckets"))
-    val merged = graft.operators.Similarity
-      .mergeDeltaRows(base, delta, "doc_id")
-    Artifact.publish(retract.fold(merged)(ids => merged.join(
-        ids.select(col("doc_id")), Seq("doc_id"), "left_anti")),
-      indexDir, "buckets")
-    committed match {
-      case None =>
-        // bound by the fold watermark so a row a live appender lands
-        // after the fold-read survives (the Similarity/TextAnalysis
-        // compactor contract)
-        graft.operators.Similarity.truncateStoreThrough(spark, storeDir,
-          foldedThrough)
-      case Some(c) =>
-        // keep the not-yet-committed epochs: rewrite via the same
-        // swap the readers recover (readDedupDelta resolves)
-        Artifact.publish(
-          spark.read.parquet(Artifact.resolve(spark, storeDir))
-            .join(c.select(col("epoch")), Seq("epoch"), "left_anti"),
-          storeDir)
-    }
-  }
 
   /** The dedup-index maintenance loop as ONE ingest stream — the
     * [[graft.operators.Similarity.maintainIndexStream]] pattern on the
@@ -376,52 +343,41 @@ object Dedup {
     * verify reads for ingested candidates ([[readDocsDelta]]; without it
     * a later collision with a loop-ingested doc would be silently dropped
     * at the verify's lake lookup). At the delta-fraction threshold
-    * [[compactDedupIndex]] folds the buckets into the base. No advisory
+    * [[compactDedupIndex]] folds the buckets into the base
+    * ([[DeltaStore.Trigger]]). No advisory
     * and no retrain: MinHash is untrained, so an appended row is exact
     * forever — compaction here is purely a read-amplification fold. */
   def maintainDedupIndexStream(docStream: DataFrame, spark: SparkSession,
       indexDir: String, maintDir: String,
       compactAt: Double = 0.25): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    // running-counter trigger (the maintainIndexStream convention)
-    var baseCount = -1L
-    var deltaCount = -1L
+    val trigger = new DeltaStore.Trigger(spark, compactAt,
+      s"$indexDir/buckets", s"$maintDir/buckets")
     docStream.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val buckets = bucketRows(signRows(batch)).withColumn("epoch", lit(epoch))
+        val buckets = bucketRows(signRows(batch))
         val n = buckets.count()
-        buckets.write.mode("append")
-          .parquet(Artifact.resolve(spark, s"$maintDir/buckets"))
-        batch.select(col("doc_id"), col("text"))
-          .withColumn("epoch", lit(epoch))
-          .write.mode("append")
-          .parquet(Artifact.resolve(spark, s"$maintDir/docs"))
-        if (baseCount < 0) baseCount = spark.read.parquet(
-          Artifact.resolve(spark, indexDir, "buckets")).count()
-        if (deltaCount < 0)
-          deltaCount = spark.read
-            .parquet(Artifact.resolve(spark, s"$maintDir/buckets")).count()
-        else deltaCount += n
-        if (deltaCount > 0 && deltaCount >= compactAt * baseCount) {
+        DeltaStore.append(buckets, s"$maintDir/buckets", epoch)
+        DeltaStore.append(batch.select(col("doc_id"), col("text")),
+          s"$maintDir/docs", epoch)
+        trigger.afterAppend(n) {
           compactDedupIndex(spark, indexDir, s"$maintDir/buckets")
           // the doc-lake partition is append-forever (the verify's text
           // lookup needs it for every ingested doc) — coalesce its
           // per-batch file sets on the same cadence, sorted by doc_id so
           // footer stats serve the candidate semi-join; this foreachBatch
           // slot is the quiescence the wholesale rewrite assumes
-          graft.operators.Similarity.coalesceStore(spark, s"$maintDir/docs",
+          DeltaStore.coalesceStore(spark, s"$maintDir/docs",
             Seq("doc_id", "epoch"), Seq("doc_id", "epoch"))
-          baseCount = -1
-          deltaCount = 0
         }
       }
   }
 
   /** Replay-safe doc-level latest-wins read of the appended documents'
-    * lake partition ((doc_id, text, epoch) rows;
-    * [[graft.operators.Similarity.readEpochDelta]] on doc_id). */
+    * lake partition ((doc_id, text, epoch) rows; [[DeltaStore.latest]] on
+    * doc_id). */
   def readDocsDelta(spark: SparkSession, docsDir: String): DataFrame =
-    graft.operators.Similarity.readEpochDelta(spark, docsDir, "doc_id")
+    DeltaStore.latest(spark, docsDir, "doc_id")
 
   /** Dedup an arriving (doc_id, text) batch against the PERSISTED corpus
     * index, optionally ∪ an appended delta store: the arriving side signs
@@ -452,7 +408,7 @@ object Dedup {
         Artifact.find(spark, s).isDefined }
     val idx =
       if (stores.isEmpty) base
-      else graft.operators.Similarity.mergeDeltaRows(base,
+      else DeltaStore.overlay(base,
         readDedupDeltaCapped(spark, stores, committedEpochs), "doc_id")
     dedupAgainstIndex(spark, dir, arrivals, idx, deltaDocs)
   }

@@ -242,8 +242,7 @@ object LakeView {
       val metaAll = Tables.documents(spark, dir)
         .select(("doc_id" +: baseCols).map(col): _*)
       val meta = pruneIdsLocal match {
-        case Some(ids) => metaAll.filter(col("doc_id")
-          .isin(ids.map(Long.box): _*))
+        case Some(ids) => metaAll.filter(col("doc_id").isInCollection(ids))
         case None => pruneIds.fold(Tables.spread(metaAll)) { ids =>
           val idSet = ids.select(col("doc_id")).distinct()
           metaAll.join(if (broadcastPrune) broadcast(idSet) else idSet,
@@ -365,8 +364,7 @@ object LakeView {
       }
     val baseTab = Tables.documents(spark, dir)
     val basePruned = idsLocal match {
-      case Some(ids) => baseTab.filter(col("doc_id")
-        .isin(ids.map(Long.box): _*))
+      case Some(ids) => baseTab.filter(col("doc_id").isInCollection(ids))
       case None => baseTab.join(changedIds, Seq("doc_id"), "left_semi")
     }
     val baseRows = Tables.spread(basePruned)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.Vec._
-import graft.storage.Artifact
+import graft.storage.{Artifact, DeltaStore}
 
 /** Similarity search over the `embeddings` fixture (`vec_id, embedding:
   * array<float>[64], label`): brute-force cosine top-k as the exact baseline,
@@ -1213,9 +1213,9 @@ object Similarity {
     // ingest-appended delta lists ([[appendIndexStream]]) ride the same
     // scan: the pinned base materialization is untouched and the delta
     // unions in — the FAISS-style "inverted lists grow, quantizers
-    // stay" maintenance contract ([[mergeDeltaRows]] for why it is an
+    // stay" maintenance contract ([[DeltaStore.overlay]] for why it is an
     // anti-join union, not a plain union)
-    val lists = extraLists.fold(baseLists)(mergeDeltaRows(baseLists, _, "vec_id"))
+    val lists = extraLists.fold(baseLists)(DeltaStore.overlay(baseLists, _, "vec_id"))
     // queries probe their NProbe nearest cells (the topkIvf probe shape),
     // each probe row carrying the query's broadcast-ready distance table.
     // The memo key carries a "stridecb" tag naming the codebook the tables
@@ -1227,21 +1227,6 @@ object Similarity {
       graft.sources.Caches.memoized(spark, s"sim-pq-qt|stridecb|$dir|$k")(
         graft.sources.Caches.shared(pqQueryTables(q, cb))))
     ivfPqAdcScanOver(lists, cents, qt, q)
-  }
-
-  /** Base ∪ delta with the base's rows dropped for any key the delta
-    * re-lists — the read-side merge every delta-serving leg uses. Before a
-    * compaction this is a no-op union (appended keys are fresh); after
-    * [[compactIndex]] it is what makes a REPLAYED old epoch invisible (its
-    * rows are already merged into the base), and under a genuine same-key
-    * re-upload the delta (newer) row deterministically wins. The anti-join
-    * probes the base with only the delta's key column — AQE broadcasts the
-    * small side; the base materialization is never shuffled. */
-  private[graft] def mergeDeltaRows(base: DataFrame, delta: DataFrame,
-      key: String): DataFrame = {
-    val dd = delta.select(base.columns.map(col).toIndexedSeq: _*)
-    base.join(dd.select(col(key)).distinct(), Seq(key), "left_anti")
-      .unionByName(dd)
   }
 
   /** The probe-select + cell-bounded ADC core over EXPLICIT index frames —
@@ -1603,33 +1588,14 @@ object Similarity {
     vecStream.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        encodeForIndex(spark, dir, batch)
-          .withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(Artifact.resolve(spark, storeDir))
+        DeltaStore.append(encodeForIndex(spark, dir, batch), storeDir, epoch)
       }
   }
 
   /** The replay-safe read of the appended delta lists
-    * ([[readEpochDelta]] on vec_id). */
+    * ([[DeltaStore.latest]] on vec_id). */
   def readIndexDelta(spark: SparkSession, storeDir: String): DataFrame =
-    readEpochDelta(spark, storeDir, "vec_id")
-
-  /** The replay-safe read of an epoch-stamped append store: the LATEST
-    * epoch wins per `key` ([[Ingest.latestPerKey]]) — a deterministic
-    * upsert (within one epoch a key appears once: the ingest contract of
-    * any keyed sink), and byte-identical replay copies of that epoch
-    * collapse in the same rank, with no separate dedup shuffle. Resolves
-    * an interrupted coalesce swap first. Epoch-less stores (a pre-epoch
-    * layout, or a side table written by a batch backfill) keep the plain
-    * key dedup — safe only under the append-only/byte-identical-replay
-    * contract. */
-  private[graft] def readEpochDelta(spark: SparkSession, storeDir: String,
-      key: String): DataFrame = {
-    val raw = spark.read.parquet(Artifact.resolve(spark, storeDir))
-    if (raw.columns.contains("epoch"))
-      Ingest.latestPerKey(raw, key, col("epoch")).drop("epoch")
-    else raw.dropDuplicates(key)
-  }
+    DeltaStore.latest(spark, storeDir, "vec_id")
 
   /** Persist the built IVFADC index — inverted lists + both quantizers —
     * as three parquet tables. At 100 TB the index build (corpus scan,
@@ -1670,7 +1636,7 @@ object Similarity {
     val cents = spark.read.parquet(s"$indexDir/centroids")
     val cb = spark.read.parquet(s"$indexDir/codebook")
     val lists = storeDir.fold(base)(s =>
-      mergeDeltaRows(base, readIndexDelta(spark, s), "vec_id"))
+      DeltaStore.overlay(base, readIndexDelta(spark, s), "vec_id"))
     ivfPqAdcScanOver(lists, cents, pqQueryTables(q, cb), q)
   }
 
@@ -1680,7 +1646,7 @@ object Similarity {
     * vectors' lake partition (the exact re-rank's source for appended
     * ids). Serve-before-compaction ≡ serve-after-compaction bit-for-bit:
     * [[compactIndex]] only moves byte-identical rows from the delta store
-    * into the base lists, and [[mergeDeltaRows]] makes the move (and any
+    * into the base lists, and [[DeltaStore.overlay]] makes the move (and any
     * replayed epoch left behind) invisible to the scan. */
   def topkIvfPqFromSavedWithDelta(spark: SparkSession, dir: String,
       q: DataFrame, indexDir: String, storeDir: String,
@@ -1694,104 +1660,16 @@ object Similarity {
     * the query path). Quantizers are NOT retrained: compaction moves
     * byte-identical rows, so serving before and after is bit-equal
     * (`IndexMaintenanceSpec` pins it); a retrain is a fresh [[saveIndex]]
-    * over the grown lake, scheduled when [[retrainAdvised]] trips.
-    *
-    * Crash-safety ordering: the merged lists land in a sibling directory
-    * first, then swap in ([[Artifact.publish]] — the delete→rename window
-    * is recovered by [[Artifact.resolve]] on the next read), then the delta
-    * store truncates BOUNDED by the fold watermark
-    * ([[truncateStoreThrough]]: only epochs the fold-read could have seen
-    * are dropped; a live appender's later rows survive). A crash between
-    * swap and truncate leaves delta rows in BOTH base and store — which
-    * [[mergeDeltaRows]] already serves correctly (that overlap is the
-    * same state a post-compaction epoch replay creates) — so every crash
-    * point is serve-consistent. */
+    * over the grown lake, scheduled when [[retrainAdvised]] trips. The
+    * fold and its crash order are [[DeltaStore.fold]]'s. */
   def compactIndex(spark: SparkSession, indexDir: String,
-      storeDir: String): Unit = {
-    import spark.implicits._
-    // the fold watermark lands BEFORE the delta read: anything at or
-    // below it is folded; anything a live appender lands above it
-    // survives the truncate
-    val raw = spark.read.parquet(Artifact.resolve(spark, storeDir))
-    val foldedThrough =
-      if (raw.columns.contains("epoch"))
-        raw.agg(max(col("epoch"))).as[Option[Long]].head()
-      else None
-    val delta = readIndexDelta(spark, storeDir)
-    if (delta.isEmpty) return
-    val base = spark.read.parquet(Artifact.resolve(spark, indexDir, "lists"))
+      storeDir: String): Unit =
     // a retraction tombstone (null cell — [[CorpusLake.refreshIndexFromLake]])
     // is spent once its vec's base rows are anti-joined away in THIS
     // rewrite — drop it so the base never accumulates dead rows for
     // deleted vectors (the lexical fold's twin rule)
-    Artifact.publish(mergeDeltaRows(base, delta, "vec_id")
-      .filter(col("cent_id").isNotNull), indexDir, "lists")
-    truncateStoreThrough(spark, storeDir, foldedThrough)
-  }
-
-  /** Truncate an append store to a schema-only parquet dir (row-free but
-    * readable): the store must survive compaction so a restarted stream
-    * can keep appending — and so a replayed pre-compaction epoch has a
-    * place to land (its rows are then hidden by [[mergeDeltaRows]]). */
-  private[graft] def truncateStore(spark: SparkSession, storeDir: String): Unit = {
-    val schema = spark.read.parquet(storeDir).schema
-    spark.createDataFrame(spark.sparkContext
-        .emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode("overwrite").parquet(storeDir)
-  }
-
-  /** Truncate an append store down to the rows a fold has NOT consumed:
-    * epoch-stamped rows at or below `foldedThrough` were visible to the
-    * fold-read and live in the merged base, while rows ABOVE it — an
-    * append that landed after the fold-read — survive, so compaction
-    * beside a live appender loses nothing it did not fold (a row both
-    * folded and kept is served once by the keyed merge). `None` (an
-    * epoch-less store: no watermark to bound by) falls back to the full
-    * [[truncateStore]]. The rewrite goes through [[Artifact.publish]],
-    * whose swap every reader and appender resolves. */
-  private[graft] def truncateStoreThrough(spark: SparkSession,
-      storeDir: String, foldedThrough: Option[Long]): Unit =
-    foldedThrough match {
-      case None => truncateStore(spark, storeDir)
-      case Some(m) =>
-        Artifact.publish(spark.read.parquet(Artifact.resolve(spark, storeDir))
-          .filter(col("epoch") > m), storeDir)
-    }
-
-  /** Coalesce an append store's many small per-batch files into
-    * `ceil(rows / target)` sorted files — the side-table twin of the lake
-    * OPTIMIZE ([[CorpusLake.optimizeCorpus]]), for the grow-forever raw
-    * partitions the maintenance loops keep beside their delta stores
-    * (`maintDir/vecs`, `maintDir/docs`). A logical no-op: every
-    * `dedupKeys` row survives (byte-identical replay copies collapse —
-    * the collapse every reader already applies); rows are range-
-    * partitioned and sorted on `sortKeys` so parquet footer min/max
-    * stats serve the readers' key lookups after the per-batch layout is
-    * gone. Rides [[Artifact.publish]]; callers run it inside the
-    * serialized foreachBatch slot (the no-concurrent-append quiescence
-    * every wholesale rewrite here assumes). No-op on a missing store. */
-  private[graft] def coalesceStore(spark: SparkSession, storeDir: String,
-      dedupKeys: Seq[String], sortKeys: Seq[String],
-      targetRowsPerFile: Long = 1L << 20): Unit = {
-    val p = Artifact.find(spark, storeDir).getOrElse(return)
-    // mergeSchema: a store whose epochs carry evolved schemas must not
-    // lose a column to whichever file the plain reader samples; the
-    // rewrite physically unifies the schema (nulls backfilled)
-    // persist before the sizing count: the rewrite would otherwise
-    // re-scan and re-dedup the whole store a second time for the write.
-    // recursive: a lake store may hold live/packed sub-dirs (the
-    // incremental OPTIMIZE layout) — the full rewrite flattens them
-    val rows = spark.read.option("mergeSchema", "true")
-      .option("recursiveFileLookup", "true").parquet(p)
-      .dropDuplicates(dedupKeys).persist()
-    try {
-      val n = rows.count()
-      val nFiles = math.max(1L,
-        (n + targetRowsPerFile - 1) / targetRowsPerFile).toInt
-      Artifact.publish(rows.repartitionByRange(nFiles, sortKeys.map(col): _*)
-        .sortWithinPartitions(sortKeys.map(col): _*), storeDir)
-    } finally rows.unpersist()
-  }
+    DeltaStore.fold(spark, storeDir, indexDir, "lists", "vec_id")(
+      readIndexDelta(spark, storeDir))(_.filter(col("cent_id").isNotNull))
 
   /** The retrain job [[retrainAdvised]] schedules — the one operation the
     * pinned-quantizer maintenance contract defers: rebuild coarse + fine
@@ -1819,9 +1697,9 @@ object Similarity {
   }
 
   /** The replay-safe read of an appended raw-vector lake partition
-    * ((vec_id, embedding, epoch) rows; [[readEpochDelta]] on vec_id). */
+    * ((vec_id, embedding, epoch) rows; [[DeltaStore.latest]] on vec_id). */
   def readVecsDelta(spark: SparkSession, vecsDir: String): DataFrame =
-    readEpochDelta(spark, vecsDir, "vec_id")
+    DeltaStore.latest(spark, vecsDir, "vec_id")
 
   /** Mean-recall MARGIN under the shipped baseline past which
     * [[retrainAdvised]] trips. The advisory is relative, not an absolute
@@ -1972,40 +1850,25 @@ object Similarity {
     * with the advisory row appended to `maintDir/advisory`, and (4) when
     * the delta fraction reaches `compactAt` of the persisted base,
     * [[compactIndex]] folds the delta into `indexDir` — all off the query
-    * path. Every write is epoch-stamped, so a restart that replays an
-    * epoch — even ACROSS a compaction boundary — is invisible to serving
-    * ([[mergeDeltaRows]]; `IndexMaintenanceSpec` pins it). */
+    * path ([[DeltaStore.Trigger]]). Every write is epoch-stamped, so a
+    * restart that replays an epoch — even ACROSS a compaction boundary —
+    * is invisible to serving ([[DeltaStore.overlay]];
+    * `IndexMaintenanceSpec` pins it). */
   def maintainIndexStream(vecStream: DataFrame, spark: SparkSession,
       dir: String, indexDir: String, maintDir: String,
       compactAt: Double = 0.25,
       advise: Boolean = true): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import spark.implicits._
-    // threshold bookkeeping as RUNNING counters: the base is counted once
-    // per (re)start/compaction and the delta accumulates batch-side counts
-    // — per-batch trigger cost is O(batch), never a footer scan of the
-    // persisted base or a windowed dedup of the whole store. A replayed
-    // epoch over-counts the delta slightly, which only compacts EARLIER —
-    // safe for a heuristic trigger.
-    var baseCount = -1L
-    var deltaCount = -1L
+    val trigger = new DeltaStore.Trigger(spark, compactAt,
+      s"$indexDir/lists", s"$maintDir/lists")
     vecStream.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
         val n = batch.count()
-        encodeForIndex(spark, dir, batch)
-          .withColumn("epoch", lit(epoch))
-          .write.mode("append")
-          .parquet(Artifact.resolve(spark, s"$maintDir/lists"))
-        batch.select($"vec_id", $"embedding")
-          .withColumn("epoch", lit(epoch))
-          .write.mode("append")
-          .parquet(Artifact.resolve(spark, s"$maintDir/vecs"))
-        if (baseCount < 0) baseCount = spark.read
-          .parquet(Artifact.resolve(spark, indexDir, "lists")).count()
-        if (deltaCount < 0)
-          deltaCount = spark.read
-            .parquet(Artifact.resolve(spark, s"$maintDir/lists")).count()
-        else deltaCount += n
+        DeltaStore.append(encodeForIndex(spark, dir, batch),
+          s"$maintDir/lists", epoch)
+        DeltaStore.append(batch.select($"vec_id", $"embedding"),
+          s"$maintDir/vecs", epoch)
         if (advise) {
           // the advisory measures the REAL serving leg (persisted base ∪
           // store), so rows folded by earlier compactions keep counting
@@ -2018,19 +1881,17 @@ object Similarity {
             .write.mode("append")
             .parquet(Artifact.resolve(spark, s"$maintDir/advisory"))
         }
-        if (deltaCount > 0 && deltaCount >= compactAt * baseCount) {
+        trigger.afterAppend(n) {
           compactIndex(spark, indexDir, s"$maintDir/lists")
           // the raw-vector lake partition is append-forever (the re-rank
           // and a future retrain read it) — coalesce its per-batch file
           // sets on the same cadence, sorted by vec_id for the re-rank's
           // id lookups; this foreachBatch slot is the quiescence the
           // wholesale rewrite assumes
-          coalesceStore(spark, s"$maintDir/vecs",
+          DeltaStore.coalesceStore(spark, s"$maintDir/vecs",
             Seq("vec_id", "epoch"), Seq("vec_id", "epoch"))
-          if (advise) coalesceStore(spark, s"$maintDir/advisory",
+          if (advise) DeltaStore.coalesceStore(spark, s"$maintDir/advisory",
             Seq("epoch"), Seq("epoch"))
-          baseCount = -1 // recount once, next batch (amortized per compaction)
-          deltaCount = 0
         }
       }
   }
@@ -2086,13 +1947,13 @@ object Similarity {
 
   /** The exact-rerank's vector source under maintenance: base lake ∪ the
     * appended vectors' side table, delta winning on a same-id re-upload
-    * ([[mergeDeltaRows]] semantics on the raw vectors). */
+    * ([[DeltaStore.overlay]] semantics on the raw vectors). */
   private[graft] def lakeWithDelta(spark: SparkSession, dir: String,
       deltaVecs: DataFrame): DataFrame = {
     import spark.implicits._
     val dv = deltaVecs.select($"vec_id", asDouble($"embedding").as("v"))
       .withColumn("nrm", norm($"v"))
-    mergeDeltaRows(corpus(spark, dir), dv, "vec_id")
+    DeltaStore.overlay(corpus(spark, dir), dv, "vec_id")
   }
 
   /** Per-label embedding centroids via the typed [[graft.functions.CentroidAgg]]

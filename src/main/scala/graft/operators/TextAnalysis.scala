@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
 import graft.functions.Text._
-import graft.storage.Artifact
+import graft.storage.{Artifact, DeltaStore}
 
 /** Text-analysis operators over the `documents` fixture: token counting,
   * n-gram language identification, quality scoring, and document
@@ -500,13 +500,8 @@ object TextAnalysis {
     // every incremental search engine (stale idf, bounded by segment-merge
     // cadence), matching the pinned-quantizer rule of the dense leg.
     // The merge drops base postings of any doc the delta re-lists
-    // ([[graft.operators.Similarity.mergeDeltaRows]] — the one shared
-    // implementation of the anti-join-union contract): before a compaction
-    // that is a no-op (appended ids are fresh); after [[compactPostings]]
-    // it is what makes a REPLAYED old epoch invisible (its rows are
-    // already merged into the base) — latest wins, per doc.
-    val tf = extraPostings.fold(baseTf)(
-      graft.operators.Similarity.mergeDeltaRows(baseTf, _, "doc_id"))
+    // ([[DeltaStore.overlay]]): latest wins, per doc.
+    val tf = extraPostings.fold(baseTf)(DeltaStore.overlay(baseTf, _, "doc_id"))
     val cap = forceCap.getOrElse(bm25DfCap(nDocs.toLong))
     // rank first, cap second: the cap is on the ranking key (df asc), so
     // the capped set is a prefix of the ranking and rank-then-cap equals
@@ -580,29 +575,15 @@ object TextAnalysis {
     docStream.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        encodeForPostings(batch)
-          .withColumn("epoch", lit(epoch))
-          .write.mode("append").parquet(Artifact.resolve(spark, storeDir))
+        DeltaStore.append(encodeForPostings(batch), storeDir, epoch)
       }
   }
 
-  /** The replay-safe read of the appended postings segments: byte-identical
-    * replay copies collapse on the full (doc_id, tok, epoch) key, then the
-    * LATEST epoch wins per DOCUMENT — the whole posting set of the newest
-    * version replaces the old one (a changed re-upload may have dropped
-    * tokens; row-level latest-wins would leak the removed ones). Epoch-less
-    * stores (pre-epoch layout / batch backfills) keep the plain key dedup,
-    * safe only under the append-only/byte-identical-replay contract. */
-  def readPostingsDelta(spark: SparkSession, storeDir: String): DataFrame = {
-    import spark.implicits._
-    val raw = spark.read.parquet(Artifact.resolve(spark, storeDir))
-    if (raw.columns.contains("epoch"))
-      raw.dropDuplicates("doc_id", "tok", "epoch")
-        .withColumn("_maxe", max($"epoch").over(
-          Window.partitionBy($"doc_id")))
-        .filter($"epoch" === $"_maxe").drop("_maxe", "epoch")
-    else raw.dropDuplicates("doc_id", "tok")
-  }
+  /** The replay-safe read of the appended postings segments: the whole
+    * posting set of each document's newest epoch ([[DeltaStore.latestDocs]]
+    * on (doc_id, tok)). */
+  def readPostingsDelta(spark: SparkSession, storeDir: String): DataFrame =
+    DeltaStore.latestDocs(DeltaStore.read(spark, storeDir), "doc_id", "tok")
 
   /** Merge the appended postings segments back into the persisted base
     * postings ([[savePostingsIndex]] artifacts) — the segment-merge half
@@ -612,40 +593,22 @@ object TextAnalysis {
     * posting rows, so serving before and after is bit-equal —
     * `IndexMaintenanceSpec` pins it); refreshing the statistics is a
     * reindex ([[savePostingsIndex]] over the grown corpus), a separate
-    * scheduled job. Same crash-safety ordering as the dense twin: merged
-    * postings land in a sibling dir, swap in, then the store truncates
-    * bounded by the fold watermark (a live appender's later rows
-    * survive) — a crash between swap and truncate leaves rows in both
-    * base and store, which the serving-side merge already handles (the
-    * post-compaction replay state). */
+    * scheduled job. The fold and its crash order are [[DeltaStore.fold]]'s. */
   def compactPostings(spark: SparkSession, indexDir: String,
       storeDir: String): Unit = {
-    import spark.implicits._
-    val raw = spark.read.parquet(Artifact.resolve(spark, storeDir))
-    val foldedThrough =
-      if (raw.columns.contains("epoch"))
-        raw.agg(org.apache.spark.sql.functions.max($"epoch"))
-          .as[Option[Long]].head()
-      else None
-    val delta = readPostingsDelta(spark, storeDir)
-    if (delta.isEmpty) return
-    val base = spark.read.parquet(
-      Artifact.resolve(spark, indexDir, "postings"))
     // a retraction tombstone (null token — [[CorpusLake.refreshPostingsFromLake]])
     // is spent once its doc's base rows are anti-joined away in THIS
     // rewrite: it shadows nothing afterwards (any future delta row takes
     // per-doc priority through the serving merge regardless), so the fold
     // drops it — the base never accumulates dead rows for deleted docs
-    Artifact.publish(
-      graft.operators.Similarity.mergeDeltaRows(base, delta, "doc_id")
-        .filter(col("tok").isNotNull),
-      indexDir, "postings")
-    graft.operators.Similarity.truncateStoreThrough(spark, storeDir,
-      foldedThrough)
+    val folded = DeltaStore.fold(spark, storeDir, indexDir, "postings",
+      "doc_id")(readPostingsDelta(spark, storeDir))(
+      _.filter(col("tok").isNotNull))
     // the loaded-artifact memo now points at the PRE-compaction file set —
     // drop it (and unpersist its cached frames) so the next load reads the
     // merged base; index artifacts are mutable at exactly this boundary
-    graft.sources.Caches.invalidate(spark, s"text-bm25-index-saved|$indexDir")
+    if (folded)
+      graft.sources.Caches.invalidate(spark, s"text-bm25-index-saved|$indexDir")
   }
 
   /** The deterministic BATCH twin of the segment-append encode, as its own
@@ -669,7 +632,7 @@ object TextAnalysis {
     * epoch-stamped segment appended to `maintDir/seg`, and when the
     * segment fraction reaches `compactAt` of the persisted base postings,
     * [[compactPostings]] folds the segments into `indexDir` — all off the
-    * query path.
+    * query path ([[DeltaStore.Trigger]]).
     *
     * With `adviseDir` (the base-corpus fixture dir), the loop ALSO keeps
     * the raw (doc_id, text) lake partition under `maintDir/docs` and runs
@@ -684,37 +647,25 @@ object TextAnalysis {
     * memoized; a statistics truth cannot be). The docs partition is never
     * truncated by compaction — it accumulates until an explicit reindex,
     * exactly the window the SAVED-leg check must keep measuring
-    * post-fold. Restart/replay safety is the dense twin's: epoch-stamped
-    * writes, keyed read-side dedup, post-compaction overlap hidden by the
-    * serving merge. */
+    * post-fold. Restart/replay safety is [[DeltaStore]]'s. */
   def maintainPostingsStream(docStream: DataFrame, spark: SparkSession,
       indexDir: String, maintDir: String,
       compactAt: Double = 0.25,
       adviseDir: Option[String] = None): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import spark.implicits._
-    // running-counter trigger, the maintainIndexStream convention: base
-    // counted once per (re)start/compaction, delta accumulated batch-side
-    var baseCount = -1L
-    var deltaCount = -1L
+    val trigger = new DeltaStore.Trigger(spark, compactAt,
+      s"$indexDir/postings", s"$maintDir/seg")
     docStream.writeStream
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        val seg = encodeForPostings(batch).withColumn("epoch", lit(epoch))
+        val seg = encodeForPostings(batch)
         val n = seg.count()
-        seg.write.mode("append")
-          .parquet(Artifact.resolve(spark, s"$maintDir/seg"))
+        DeltaStore.append(seg, s"$maintDir/seg", epoch)
         adviseDir.foreach { _ =>
-          batch.select($"doc_id", $"text").withColumn("epoch", lit(epoch))
-            .write.mode("append")
-            .parquet(Artifact.resolve(spark, s"$maintDir/docs"))
+          DeltaStore.append(batch.select($"doc_id", $"text"),
+            s"$maintDir/docs", epoch)
         }
-        if (baseCount < 0) baseCount = spark.read.parquet(
-          Artifact.resolve(spark, indexDir, "postings")).count()
-        if (deltaCount < 0)
-          deltaCount = spark.read
-            .parquet(Artifact.resolve(spark, s"$maintDir/seg")).count()
-        else deltaCount += n
-        if (deltaCount > 0 && deltaCount >= compactAt * baseCount) {
+        trigger.afterAppend(n) {
           adviseDir.foreach { d =>
             val (mean, advised) = lexRetrainAdvised(spark, d, indexDir,
               s"$maintDir/seg", Dedup.readDocsDelta(spark, s"$maintDir/docs"))
@@ -723,8 +674,6 @@ object TextAnalysis {
               .write.mode("append").parquet(s"$maintDir/advisory")
           }
           compactPostings(spark, indexDir, s"$maintDir/seg")
-          baseCount = -1
-          deltaCount = 0
         }
       }
   }

@@ -653,7 +653,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     Seq((1L, "a", 0L), (2L, "b", 1L), (3L, "late", 7L))
       .toDF("vec_id", "payload", "epoch")
       .write.mode("overwrite").parquet(store)
-    Similarity.truncateStoreThrough(spark, store, Some(1L))
+    graft.storage.DeltaStore.truncateStoreThrough(spark, store, Some(1L))
     val left = spark.read.parquet(store)
       .select($"vec_id", $"epoch").as[(Long, Long)].collect().toSet
     assert(left == Set((3L, 7L)),
@@ -661,7 +661,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // an epoch-less store has no watermark: full truncate, schema intact
     Seq((1L, "a")).toDF("vec_id", "payload")
       .write.mode("overwrite").parquet(store)
-    Similarity.truncateStoreThrough(spark, store, None)
+    graft.storage.DeltaStore.truncateStoreThrough(spark, store, None)
     assert(spark.read.parquet(store).count() == 0)
     assert(spark.read.parquet(store).columns.toSeq ==
       Seq("vec_id", "payload"))
